@@ -136,37 +136,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     installCodegenFailCounter()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val poolSize = sys.env.getOrElse("SPARK_GRAFT_POOL", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Let AQE swap sort-merge for shuffled-hash joins from RUNTIME
-      // sizes (guide §3.1): when a join's build side exceeds the
-      // broadcast threshold, the sort-merge fallback SORTS both sides —
-      // at the 100× gate that was two full sorts of the 10⁹-row
-      // positional-hash table against a 10⁷-row duplicated-hash build
-      // side. 64 MB per post-shuffle build partition bounds each task's
-      // hash map (× cores = ≤2 GB concurrent build memory); the default
-      // (0) never converts. Scale-adaptive by construction — small
-      // builds still broadcast, oversized builds still sort-merge.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      // Concurrent query legs (prep prewarms; the pooled timed leg)
-      // share the executor fairly instead of FIFO head-of-line blocking.
-      .config("spark.scheduler.mode", "FAIR")
-      // Split size matched to the data scale: sf0.1 lineitem is one
-      // ~11 MB parquet file, which under the production default (128 MB)
-      // scans on a single thread. 1 MB splits ≈ one row-group per core
-      // here; at real multi-TB scale the default is the right setting.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.prep(spark)
+    val cpus = Session.cpus(Session.Profile.Bench, sys.env)
+    val spark = Session.start(Session.Profile.Bench)
 
     // Host 1-minute load average at start and end of the run: the
     // shared-host noise signature (documented in BASELINE.md) shows up

@@ -359,20 +359,31 @@ object ScaleStress {
     a._1 > minRows && a == b
   }
 
+  /** Wall seconds of query `q` on corpus `d` with `parts` shuffle
+    * partitions: the MIN of two fresh-cache runs (the first run pays
+    * cold page-cache reads of a 10×-bigger corpus — I/O warmup, not
+    * compute, and it inflated ratios ~3× before the min). The timer
+    * starts before construction, so query construction work (memo
+    * actions on cold caches) counts. Shuffle partitions scale with the
+    * corpus (32 → 128), the knob a real cluster (or AQE) turns with data
+    * volume — fixed 32 spills the 100× substring aggregation — and go
+    * back to the gate's 32 afterwards.
+    */
+  def timedLeg(spark: SparkSession, d: String, q: String, parts: Int): Double = {
+    def once(): Double = {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      Caches.clear(spark)
+      val t0 = System.nanoTime()
+      SparkEntry.queries(q)(spark, d).count()
+      (System.nanoTime() - t0) / 1e9
+    }
+    try math.min(once(), once())
+    finally spark.conf.set("spark.sql.shuffle.partitions", "32")
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/scale10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // same runtime SMJ→shuffled-hash conversion as the bench session
-      // (Bench.scala) — the gate must measure the plans the bench runs
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.prep(spark)
+    val spark = Session.start(Session.Profile.Gate)
 
     val t0 = System.nanoTime()
     generate(spark, dir)
@@ -693,30 +704,13 @@ object ScaleStress {
       val chain = Seq("q_dedup_substring", "q_dedup_substring_append",
         "q_dedup_jaccard", "q_dedup_index_append", "q_dedup_embed_hybrid",
         "q_stream_neardup_gate", "q_stream_decontaminate")
-      // Per-leg cost = MIN of two fresh-cache runs (the first run pays
-      // cold page-cache reads of a 10×-bigger corpus — I/O warmup, not
-      // compute, and it inflated ratios ~3× before the min); shuffle
-      // partitions scale with the corpus (32 → 128), the knob a real
-      // cluster (or AQE, which the bench config enables) turns with
-      // data volume — fixed 32 spills the 100× substring aggregation.
-      def timedLeg(d: String, q: String, parts: Int): Double = {
-        def once(): Double = {
-          spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-          Caches.clear(spark)
-          val t0 = System.nanoTime()
-          SparkEntry.queries(q)(spark, d).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        try math.min(once(), once())
-        finally spark.conf.set("spark.sql.shuffle.partitions", "32")
-      }
       chain.foreach { q =>
         // both legs INSIDE the check (ADVICE r12): an exception while
         // timing the 10× leg is recorded as this check's failure
         // instead of aborting the whole gate run uncaught.
         check(s"scale100_cost_$q") {
-          val t10 = timedLeg(dir, q, 32)
-          val t100 = timedLeg(dir100, q, 128)
+          val t10 = timedLeg(spark, dir, q, 32)
+          val t100 = timedLeg(spark, dir100, q, 128)
           val ratio = t100 / t10
           legTimes(q) = (t10, t100)
           println(f"  LEG $q t10=$t10%.1f s t100=$t100%.1f s ratio=$ratio%.1f")

@@ -119,9 +119,7 @@ object Fingerprints extends QueryModule {
     * per-doc lambda left is the array build feeding `n`'s distinct
     * count, which never explodes.
     */
-  private[queries] def shingleIndexForProf(s: SparkSession, dir: String): DataFrame = shingleIndex(s, dir)
-
-  private def shingleIndex(s: SparkSession, dir: String): DataFrame =
+  private[graft] def shingleIndex(s: SparkSession, dir: String): DataFrame =
     shingleIndexOf(s, Tables.documents(s, dir))
 
   /** [[shingleIndex]] over an arbitrary documents frame — the batch
@@ -264,9 +262,7 @@ object Fingerprints extends QueryModule {
     * signature build (16 min-aggregates over every posting) runs once
     * per corpus, not once per consuming query.
     */
-  private[queries] def candidatePairsForProf(s: SparkSession, dir: String): DataFrame = candidatePairs(s, dir)
-
-  private def candidatePairs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def candidatePairs(s: SparkSession, dir: String): DataFrame =
     graft.Caches.memo(s, dir, "minhash_cands")(minhashPairs(postings(s, dir)))
 
   /** The confirmed near-dup pair set (minhash candidates, exact Jaccard
@@ -275,9 +271,7 @@ object Fingerprints extends QueryModule {
     * a production clean writes it out (it is the provenance record of
     * every removal decision). Tiny relative to the corpus.
     */
-  private[queries] def confirmedPairsForProf(s: SparkSession, dir: String): DataFrame = confirmedPairs(s, dir)
-
-  private def confirmedPairs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def confirmedPairs(s: SparkSession, dir: String): DataFrame =
     graft.Caches.memo(s, dir, "confirmed_pairs")(
       interCounts(s, dir, candidatePairs(s, dir))
         .withColumn("j", col("inter") / (col("na") + col("nb") - col("inter")))

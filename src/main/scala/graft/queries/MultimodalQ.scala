@@ -124,7 +124,7 @@ object MultimodalQ extends QueryModule {
     * alone and the brute-force hamming scan.
     */
   def qMultimodalCrosscheck(s: SparkSession, dir: String): DataFrame = {
-    val text = Fingerprints.confirmedPairsForProf(s, dir)
+    val text = Fingerprints.confirmedPairs(s, dir)
       .select(col("doc_a"), col("doc_b"), lit(true).as("text_dup"))
     val img = qMultimodalDedup(s, dir)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),

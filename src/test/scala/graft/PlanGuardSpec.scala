@@ -25,6 +25,11 @@ class PlanGuardSpec extends SparkSpec {
       s"queries without oracle SQL (rows-only check): $unoracled")
   }
 
+  test("the entry query returns rows") {
+    // SparkEntry.entry is the contract's smoke check: rows > 0
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   // The one query whose SEMANTICS are a cross product.
   private val allowCartesian = Set("q_join_cross")
 

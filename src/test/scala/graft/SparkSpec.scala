@@ -26,18 +26,7 @@ object SparkSpec {
     root
   }
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    Tables.prep(s)
-    s
-  }
+  lazy val spark: SparkSession = Session.start(Session.Profile.Test)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -17,7 +17,7 @@ class CurationSpec extends SparkSpec {
     // every CONFIRMED near-dup pair must land on one side — the exact
     // leakage plain per-doc hashing allows. (Unconfirmed LSH candidates
     // may legitimately cross: they are not near-dups.)
-    val pairs = Fingerprints.confirmedPairsForProf(spark, dir).collect()
+    val pairs = Fingerprints.confirmedPairs(spark, dir).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
     assert(pairs.nonEmpty, "fixture has no near-dup pairs to check")
     pairs.foreach { case (a, b) =>
