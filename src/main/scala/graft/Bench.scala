@@ -81,7 +81,7 @@ object Bench {
     * nothing and keeps its history.) Anything else whose warm rep is ≥
     * [[HeavyFloorSec]] still promotes, up to [[OverflowCap]].
     */
-  private val PinnedHeavy: Set[String] = Set(
+  private[graft] val PinnedHeavy: Set[String] = Set(
     "q_dedup_spans", "q_pca_power2", "q_dedup_index_append",
     "q_dedup_jaccard", "q_walk_mass", "q11_important",
     "q_dedup_embed_hybrid", "q20_excess_supply", "q_corr_matrix",

@@ -41,26 +41,11 @@ object Caches {
   private val hooked =
     java.util.Collections.newSetFromMap(
       new ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-  // Modules holding their own per-session side caches (e.g. the memoized
-  // bloom capacity in Fingerprints) register an eviction callback so
-  // clear()/clearAll() releases EVERYTHING keyed by a session — a
-  // long-lived JVM cycling sessions must not retain session references.
-  private val sideCaches =
-    new java.util.concurrent.CopyOnWriteArrayList[Option[SparkSession] => Unit]()
-
   // Caches derived from RAW CORPUS TABLES only (not from replaceable
   // artifacts — e.g. FrozenLayout's range layouts): these stay valid
   // across replace() and are evicted only on clear()/clearAll().
   private val invalidateOnly =
     new java.util.concurrent.CopyOnWriteArrayList[Option[SparkSession] => Unit]()
-
-  /** Register a side-cache eviction hook, run on [[clear]] (with the
-    * session), [[clearAll]] (with None = evict everything), AND every
-    * [[replace]] — anything DERIVED from a replaceable artifact must
-    * re-derive when the artifact changes. Idempotent callbacks only;
-    * registered once per module (object-init time).
-    */
-  def onClear(f: Option[SparkSession] => Unit): Unit = { sideCaches.add(f); () }
 
   /** Register an eviction hook for caches derived from the raw corpus
     * only: fired by [[clear]]/[[clearAll]] (corpus or session
@@ -69,6 +54,17 @@ object Caches {
     */
   def onInvalidate(f: Option[SparkSession] => Unit): Unit = { invalidateOnly.add(f); () }
 
+  /** Registers, once per session, the app-end listener that releases
+    * everything the session owns.
+    */
+  private def hookAppEnd(s: SparkSession): Unit =
+    if (hooked.add(s)) {
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(
+            end: SparkListenerApplicationEnd): Unit = clear(s)
+      })
+    }
+
   /** Memoize `build` (persisted MEMORY_AND_DISK) under
     * (session, dir, kind). The first caller builds; concurrent callers
     * block on the same holder instead of racing to a second, orphaned
@@ -76,12 +72,7 @@ object Caches {
     */
   def memo(s: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame = {
-    if (hooked.add(s)) {
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(
-            end: SparkListenerApplicationEnd): Unit = clear(s)
-      })
-    }
+    hookAppEnd(s)
     entries
       .computeIfAbsent((s, dir, kind),
         _ => new Holder(() => build.persist(StorageLevel.MEMORY_AND_DISK)))
@@ -103,12 +94,7 @@ object Caches {
     */
   def memoSide[T](s: SparkSession, dir: String, kind: String)(
       compute: => T): T = {
-    if (hooked.add(s)) {
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(
-            end: SparkListenerApplicationEnd): Unit = clear(s)
-      })
-    }
+    hookAppEnd(s)
     sides.computeIfAbsent((s, dir, kind),
       _ => new LazySide(() => compute)).v.asInstanceOf[T]
   }
@@ -129,8 +115,8 @@ object Caches {
     * written table. The new frame is materialized BEFORE the old one is
     * unpersisted (an append typically reads the standing artifact, so
     * evicting first would force a full rebuild), then the old frame is
-    * released and per-session side caches are evicted (anything derived
-    * from the artifact — e.g. the bloom capacity memo — must re-derive).
+    * released and the session's [[memoSide]] values are evicted (anything
+    * derived from the artifact — e.g. the bloom capacity — must re-derive).
     */
   def replace(s: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame = {
@@ -140,7 +126,6 @@ object Caches {
     val old = entries.put((s, dir, kind), holder)
     if (old != null) old.peek.foreach(_.unpersist(false))
     dropSides(Some(s))
-    sideCaches.forEach(f => f(Some(s)))
     df
   }
 
@@ -160,7 +145,6 @@ object Caches {
     // per clear/memo cycle (clear is idempotent, but the listener bus
     // would bloat).
     dropSides(Some(s))
-    sideCaches.forEach(f => f(Some(s)))
     invalidateOnly.forEach(f => f(Some(s)))
   }
 
@@ -171,7 +155,6 @@ object Caches {
     entries.values().forEach(h => h.peek.foreach(_.unpersist(false)))
     entries.clear()
     dropSides(None)
-    sideCaches.forEach(f => f(None))
     invalidateOnly.forEach(f => f(None))
     // `hooked` intentionally survives — see clear().
   }

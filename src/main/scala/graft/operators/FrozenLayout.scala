@@ -110,7 +110,7 @@ object FrozenLayout {
     }
 
   locally {
-    // onInvalidate, not onClear: layouts read raw corpus tables only,
+    // onInvalidate: layouts read raw corpus tables only,
     // so an artifact replace() (e.g. the posting-index append) does not
     // stale them — evicting there forced a full layout-rebuild storm
     // right after every append query in a bench pass.

@@ -909,26 +909,17 @@ object Fingerprints extends QueryModule {
     * `BloomFilterMightContain` (the expression behind its runtime
     * row-level join filters), which stays inside whole-stage codegen —
     * no Scala-closure UDF, no driver-built sketch. The only driver-side
-    * scalar is the capacity count, memoized per (session, corpus) and
-    * evicted through [[graft.Caches.onClear]]: a hardcoded capacity
-    * would silently degrade the false-positive rate — and thus the
-    * prefilter's pruning power — once the eval suite outgrows it.
+    * scalar is the capacity count, memoized per (session, corpus) by
+    * [[graft.Caches.memoSide]]: a hardcoded capacity would silently
+    * degrade the false-positive rate — and thus the prefilter's pruning
+    * power — once the eval suite outgrows it.
     */
-  private val bloomCapacity = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]()
-  locally {
-    graft.Caches.onClear {
-      case Some(s) => bloomCapacity.keySet.removeIf(_._1 eq s)
-      case None => bloomCapacity.clear()
-    }
-  }
-
   def qDecontaminateBloom(s: SparkSession, dir: String): DataFrame = {
     val idx = postings(s, dir)
     val benchHashes = idx.filter(col("doc_id") < 20).select("h").distinct()
     // Count-sized capacity (2× headroom), one tiny scalar per corpus.
-    val expected = bloomCapacity.computeIfAbsent((s, dir),
-      _ => math.max(1000L, benchHashes.count() * 2)).longValue()
+    val expected = graft.Caches.memoSide(s, dir, "bloom_capacity")(
+      math.max(1000L, benchHashes.count() * 2))
     val numBits =
       org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expected, 0.01)
     val bloom = benchHashes

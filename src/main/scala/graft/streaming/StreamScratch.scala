@@ -23,9 +23,9 @@ import org.apache.spark.sql.SparkSession
   *    also fires) — a long-lived JVM cycling sessions, or a harness
   *    clearing caches between legs, reclaims the space immediately
   *    instead of accumulating directories until exit. Registered via
-  *    `Caches.onInvalidate`, NOT `onClear`: an artifact `replace` (the
-  *    index-append maintenance path) does not invalidate dirs derived
-  *    from the raw corpus tables.
+  *    `Caches.onInvalidate`, which an artifact `replace` (the
+  *    index-append maintenance path) does not fire: it leaves dirs
+  *    derived from the raw corpus tables valid.
   */
 object StreamScratch {
 

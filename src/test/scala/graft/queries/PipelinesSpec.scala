@@ -174,10 +174,12 @@ class PipelinesSpec extends SparkSpec {
     // the empty-increment no-op path with zero evictions. clearAll puts
     // the session back at the pre-append state regardless of suite order.
     graft.Caches.clearAll()
-    @volatile var evictions = 0
-    graft.Caches.onClear(_ => evictions += 1)
+    @volatile var computed = 0
+    def side(): Int =
+      graft.Caches.memoSide(spark, sf, "append_probe") { computed += 1; computed }
+    assert(side() == 1 && side() == 1, "memoSide computes once per key")
     val first = Fingerprints.qDedupIndexAppend(spark, sf).collect().toSeq
-    assert(evictions >= 1, "replace must fire the side-cache eviction hooks")
+    assert(side() == 2, "the append's replace must evict memoSide values")
     // re-running re-merges the batch into the already-merged artifact;
     // the (doc_id, h) re-dedup makes that a no-op, like MERGE INTO
     val second = Fingerprints.qDedupIndexAppend(spark, sf).collect().toSeq
