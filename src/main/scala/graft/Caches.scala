@@ -6,58 +6,57 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Registry of per-(session, corpus dir) materialized DataFrame
-  * artifacts — the posting index, LSH candidate/confirmed pair sets,
-  * quantized vectors, ordinal index. These are the local-mode analog of
-  * tables a 100 TB pipeline writes once and shares across queries; here
-  * they persist at MEMORY_AND_DISK (spill, never recompute).
+import graft.operators.FrozenLayout
+
+/** The one owner of session-scoped state: per-(session, corpus dir,
+  * kind) artifacts — the posting index, LSH candidate/confirmed pair
+  * sets, quantized vectors, ordinal index, driver-side values, and the
+  * write-once file layouts. These are the local-mode analog of tables a
+  * 100 TB pipeline writes once and shares across queries; frames
+  * persist at MEMORY_AND_DISK (spill, never recompute).
   *
-  * Lifecycle contract (replaces the round-2 per-module TrieMaps, which
-  * leaked and could double-build under a concurrent first touch):
+  * Lifecycle contract — one rule:
   *
   *  - '''single build per key''': the builder runs at most once per
   *    (session, dir, kind). `computeIfAbsent` only installs a cheap lazy
-  *    holder, so nested `memo` calls inside a builder (confirmed pairs →
+  *    entry, so nested `memo` calls inside a builder (confirmed pairs →
   *    candidate pairs → postings) never recursively update the map; the
-  *    actual build is serialized by the holder's `lazy val`.
-  *  - '''eviction''': [[clear]] unpersists and drops entries — per
-  *    session, or everything. A session-end listener is registered on
-  *    first use so a stopping application releases its cached blocks.
+  *    actual build is serialized by the entry's `lazy val`.
+  *  - '''[[replace]] swaps exactly one artifact''': the maintenance path
+  *    (an append) installs the new frame and unpersists the old one.
+  *    Nothing else is evicted — no other entry reads a replaced
+  *    artifact (the only one, `postings_append_demo`, is read by the
+  *    append query alone).
+  *  - '''[[clear]]/[[clearAll]] release everything a session owns''':
+  *    frames and side values, then [[FrozenLayout]]'s range layouts and
+  *    the session's [[Scratch]] dirs (every file a query wrote). A
+  *    session-end listener is registered on first use so a stopping
+  *    application releases its blocks and files. Nothing else evicts.
   *  - '''immutability assumption''': a corpus dir is assumed immutable
   *    for the lifetime of the session — if files under `dir` change,
   *    call [[clear]] to invalidate, otherwise reads serve stale data.
   */
 object Caches {
 
-  private final class Holder(build: () => DataFrame) {
-    @volatile private var builtOpt: Option[DataFrame] = None
-    lazy val df: DataFrame = { val d = build(); builtOpt = Some(d); d }
-    /** The frame if the lazy build ever ran (only those need unpersist). */
-    def peek: Option[DataFrame] = builtOpt
+  private final class Entry(build: () => Any, release: Any => Unit) {
+    @volatile private var built: Option[Any] = None
+    lazy val value: Any = { val v = build(); built = Some(v); v }
+    /** Release the value if the lazy build ever ran. */
+    def drop(): Unit = built.foreach(release)
   }
 
   private val entries =
-    new ConcurrentHashMap[(SparkSession, String, String), Holder]()
+    new ConcurrentHashMap[(SparkSession, String, String), Entry]()
   private val hooked =
     java.util.Collections.newSetFromMap(
       new ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-  // Caches derived from RAW CORPUS TABLES only (not from replaceable
-  // artifacts — e.g. FrozenLayout's range layouts): these stay valid
-  // across replace() and are evicted only on clear()/clearAll().
-  private val invalidateOnly =
-    new java.util.concurrent.CopyOnWriteArrayList[Option[SparkSession] => Unit]()
-
-  /** Register an eviction hook for caches derived from the raw corpus
-    * only: fired by [[clear]]/[[clearAll]] (corpus or session
-    * invalidation) but NOT by [[replace]] (an artifact append does not
-    * change the underlying tables these caches read).
-    */
-  def onInvalidate(f: Option[SparkSession] => Unit): Unit = { invalidateOnly.add(f); () }
 
   /** Registers, once per session, the app-end listener that releases
-    * everything the session owns.
+    * everything the session owns. The session keeps it for life: a
+    * [[clear]] does not unhook, or every clear/memo cycle would add a
+    * second identical listener.
     */
-  private def hookAppEnd(s: SparkSession): Unit =
+  private[graft] def hookAppEnd(s: SparkSession): Unit =
     if (hooked.add(s)) {
       s.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(
@@ -65,97 +64,83 @@ object Caches {
       })
     }
 
+  private def persisted(build: => DataFrame): Entry =
+    new Entry(() => build.persist(StorageLevel.MEMORY_AND_DISK),
+      df => { df.asInstanceOf[DataFrame].unpersist(false); () })
+
+  private def lookup(s: SparkSession, dir: String, kind: String,
+      entry: => Entry): Any = {
+    hookAppEnd(s)
+    entries.computeIfAbsent((s, dir, kind), _ => entry).value
+  }
+
   /** Memoize `build` (persisted MEMORY_AND_DISK) under
     * (session, dir, kind). The first caller builds; concurrent callers
-    * block on the same holder instead of racing to a second, orphaned
+    * block on the same entry instead of racing to a second, orphaned
     * persist.
     */
   def memo(s: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    hookAppEnd(s)
-    entries
-      .computeIfAbsent((s, dir, kind),
-        _ => new Holder(() => build.persist(StorageLevel.MEMORY_AND_DISK)))
-      .df
-  }
-
-  private final class LazySide[T](compute: () => T) { lazy val v: T = compute() }
-  private val sides =
-    new ConcurrentHashMap[(SparkSession, String, String), LazySide[Any]]()
+      build: => DataFrame): DataFrame =
+    lookup(s, dir, kind, persisted(build)).asInstanceOf[DataFrame]
 
   /** Memoize a DRIVER-SIDE value derived from the corpus (a cutoff
-    * scalar, a trained merge list) under (session, dir, kind) — the
-    * non-DataFrame sibling of [[memo]]. Query CONSTRUCTION must be
-    * action-free once artifacts are warm (pinned by PlanGuardSpec), so
-    * any driver value a query derives at build time goes through here
-    * instead of re-running its job per construction. Evicted by
-    * [[clear]]/[[clearAll]] AND [[replace]] (a replaced artifact may
-    * feed the computation; conservative re-derive).
+    * scalar, a trained merge list, the path or frame of a write-once
+    * file layout) under (session, dir, kind) — the unpersisted sibling
+    * of [[memo]]. Query CONSTRUCTION must be action-free once artifacts
+    * are warm (pinned by PlanGuardSpec), so any driver value a query
+    * derives at build time goes through here instead of re-running its
+    * job per construction. Files behind the value live in a
+    * [[Scratch]] dir of `s`, so [[clear]] drops both together.
     */
   def memoSide[T](s: SparkSession, dir: String, kind: String)(
-      compute: => T): T = {
-    hookAppEnd(s)
-    sides.computeIfAbsent((s, dir, kind),
-      _ => new LazySide(() => compute)).v.asInstanceOf[T]
-  }
-
-  private def dropSides(sOpt: Option[SparkSession]): Unit = {
-    val it = sides.entrySet().iterator()
-    while (it.hasNext) {
-      // advance BEFORE testing: Option.forall(None) short-circuits true
-      // without evaluating the predicate, and remove() before next()
-      // throws IllegalStateException (the clearAll path)
-      val e = it.next()
-      if (sOpt.forall(_ eq e.getKey._1)) it.remove()
-    }
-  }
+      compute: => T): T =
+    lookup(s, dir, kind, new Entry(() => compute, _ => ())).asInstanceOf[T]
 
   /** MAINTENANCE path: replace the artifact under (session, dir, kind)
     * with `build` — the in-memory analog of appending a batch to a
     * written table. The new frame is materialized BEFORE the old one is
     * unpersisted (an append typically reads the standing artifact, so
-    * evicting first would force a full rebuild), then the old frame is
-    * released and the session's [[memoSide]] values are evicted (anything
-    * derived from the artifact — e.g. the bloom capacity — must re-derive).
+    * evicting first would force a full rebuild). Only this entry
+    * changes.
     */
   def replace(s: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame = {
-    val holder = new Holder(() => build.persist(StorageLevel.MEMORY_AND_DISK))
-    val df = holder.df
+    val entry = persisted(build)
+    val df = entry.value.asInstanceOf[DataFrame]
     df.count() // materialize from the still-cached predecessor
-    val old = entries.put((s, dir, kind), holder)
-    if (old != null) old.peek.foreach(_.unpersist(false))
-    dropSides(Some(s))
+    Option(entries.put((s, dir, kind), entry)).foreach(_.drop())
     df
   }
 
-  /** Unpersist and drop every artifact owned by `s`. */
-  def clear(s: SparkSession): Unit = {
+  private def dropEntries(sOpt: Option[SparkSession]): Unit = {
     val it = entries.entrySet().iterator()
     while (it.hasNext) {
+      // advance BEFORE testing: Option.forall(None) short-circuits true
+      // without evaluating the predicate, and remove() before next()
+      // throws IllegalStateException (the clearAll path)
       val e = it.next()
-      if (e.getKey._1 eq s) {
-        e.getValue.peek.foreach(_.unpersist(false))
+      if (sOpt.forall(_ eq e.getKey._1)) {
+        e.getValue.drop()
         it.remove()
       }
     }
-    // Deliberately NOT removed from `hooked`: the session keeps its one
-    // app-end listener for life. Removing it here would make a later
-    // memo() on the same session register a second identical listener
-    // per clear/memo cycle (clear is idempotent, but the listener bus
-    // would bloat).
-    dropSides(Some(s))
-    invalidateOnly.forEach(f => f(Some(s)))
   }
 
-  /** Unpersist and drop everything (explicit invalidation hook — e.g.
-    * after mutating a corpus dir).
+  /** Release everything `s` owns: frames and side values first, then its
+    * range layouts and scratch dirs.
+    */
+  def clear(s: SparkSession): Unit = {
+    dropEntries(Some(s))
+    FrozenLayout.clear(Some(s))
+    Scratch.clear(Some(s))
+  }
+
+  /** Release everything every session owns (explicit invalidation —
+    * e.g. after mutating a corpus dir).
     */
   def clearAll(): Unit = {
-    entries.values().forEach(h => h.peek.foreach(_.unpersist(false)))
-    entries.clear()
-    dropSides(None)
-    invalidateOnly.forEach(f => f(None))
-    // `hooked` intentionally survives — see clear().
+    dropEntries(None)
+    FrozenLayout.clear(None)
+    Scratch.clear(None)
   }
 }

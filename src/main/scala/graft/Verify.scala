@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.commons.io.FileUtils
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,19 +10,15 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Session.start(Session.Profile.Verify)
     new java.io.File(outDir).mkdirs()
-    // Pre-delete each query's output so a failure can never pass the
-    // driver's compare against STALE parquet from a previous run.
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
     // Optional comma-separated filter (local iteration only; the driver
     // always runs the full set).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      rm(new java.io.File(s"$outDir/$name"))
+      // Pre-delete each query's output so a failure can never pass the
+      // oracle compare against STALE parquet from a previous run.
+      FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -39,15 +38,16 @@ import org.apache.spark.sql.functions._
   * for two same-named columns resolving to different attributes (e.g.
   * the two sides of a self-join) — pinned by FrozenLayoutSpec.
   *
-  * Lifecycle:
-  *  - entries are evicted (and their checkpoint blocks unpersisted)
-  *    through [[graft.Caches]]'s invalidation hooks, so `Caches.clear`/
-  *    `clearAll` invalidate layouts too (same corpus-dir-immutability
-  *    assumption); an artifact `replace()` does NOT evict them (layouts
-  *    read raw corpus tables only);
-  *  - every session that ever froze a layout gets ONE app-end listener
-  *    (registered here, not via Caches.memo, so sessions that use only
-  *    the scan machinery still release their blocks on stop);
+  * Lifecycle: the layout memo is NOT merged into [[graft.Caches]]' entry
+  * map — its key (a canonicalized plan, not a corpus dir and kind) and
+  * its LRU bound differ — but Caches owns its release:
+  *  - `Caches.clear`/`clearAll` call [[clear]], which evicts the
+  *    session's layouts and unpersists their checkpoint blocks (same
+  *    corpus-dir-immutability assumption); an artifact `replace` does
+  *    not touch them;
+  *  - [[freeze]] registers the session with `Caches.hookAppEnd`, so a
+  *    session that uses only the scan machinery still releases its
+  *    blocks on stop;
   *  - the memo is LRU-BOUNDED ([[MaxEntries]]): a long-lived interactive
   *    session constructing many distinct frames evicts (and releases)
   *    the least-recently-used layout instead of pinning blocks forever;
@@ -93,11 +93,8 @@ object FrozenLayout {
         if (size() > MaxEntries) { e.getValue.evict(); true } else false
     }
 
-  private val hooked =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  private def invalidate(sOpt: Option[SparkSession]): Unit =
+  /** Evict (and release) the layouts of `s`, or of every session. */
+  private[graft] def clear(sOpt: Option[SparkSession]): Unit =
     entries.synchronized {
       val it = entries.entrySet().iterator()
       while (it.hasNext) {
@@ -108,14 +105,6 @@ object FrozenLayout {
         }
       }
     }
-
-  locally {
-    // onInvalidate: layouts read raw corpus tables only,
-    // so an artifact replace() (e.g. the posting-index append) does not
-    // stale them — evicting there forced a full layout-rebuild storm
-    // right after every append query in a bench pass.
-    graft.Caches.onInvalidate(invalidate)
-  }
 
   /** Best-effort release of a localCheckpoint's blocks: the checkpointed
     * frame's plan is a [[LogicalRDD]] over the cached RDD — unpersist it
@@ -133,12 +122,7 @@ object FrozenLayout {
     */
   def freeze(df: DataFrame, order: Seq[Column]): DataFrame = {
     val s = df.sparkSession
-    if (hooked.add(s)) {
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(
-            end: SparkListenerApplicationEnd): Unit = invalidate(Some(s))
-      })
-    }
+    graft.Caches.hookAppEnd(s)
     val ranged = df.repartitionByRange(order: _*)
       .withColumn("__pid", spark_partition_id())
     val key: Key = (s, ranged.queryExecution.analyzed.canonicalized)

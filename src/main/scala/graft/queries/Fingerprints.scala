@@ -331,11 +331,11 @@ object Fingerprints extends QueryModule {
     *  2. the arriving batch's postings are shingled and MERGED into the
     *     artifact in place via [[graft.Caches.replace]] — new frame
     *     materialized from the still-cached standing index + batch scan,
-    *     old frame unpersisted, dependent side caches (bloom capacity)
-    *     evicted. MERGE INTO semantics make the append idempotent: the
-    *     batch dedups within itself and anti-joins the standing doc set,
-    *     so already-ingested rows never double and the standing rows
-    *     stream from cache without a re-shuffle.
+    *     old frame unpersisted, nothing else evicted (no other artifact
+    *     reads this one). MERGE INTO semantics make the append
+    *     idempotent: the batch dedups within itself and anti-joins the
+    *     standing doc set, so already-ingested rows never double and the
+    *     standing rows stream from cache without a re-shuffle.
     *
     * The output re-probes the UPDATED artifact as an index (per-doc
     * posting count + the doc's hottest document frequency); the oracle
@@ -386,8 +386,8 @@ object Fingerprints extends QueryModule {
     // idempotent WITHOUT re-shuffling the standing index — the
     // standing rows stream from cache untouched. An EMPTY increment
     // (idempotent rerun) short-circuits: one batch-sized anti-join
-    // probe against the cached artifact, no rewrite, no side-cache
-    // eviction — the no-op commit path of a production MERGE.
+    // probe against the cached artifact, no rewrite — the no-op commit
+    // path of a production MERGE.
     def increment = batch.join(
       standingIndex(s, dir).select("doc_id").distinct(), Seq("doc_id"), "left_anti")
     val merged =

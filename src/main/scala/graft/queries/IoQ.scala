@@ -22,56 +22,33 @@ import org.apache.spark.sql.functions._
   */
 object IoQ extends QueryModule {
 
-  /** One scratch root per JVM for the round-trip sinks, deleted on JVM
-    * exit — repeated bench/verify runs REUSE it (writers are
-    * mode=overwrite) instead of accumulating a fresh temp dir per query
-    * invocation. `SPARK_GRAFT_SCRATCH` overrides the location; on a real
-    * multi-node cluster it must point at a shared filesystem (the
-    * default driver-local path only works because local[*] executors
-    * share the driver's disk).
+  /** Write `src`'s round trip once per (session, corpus) into a
+    * session [[graft.Scratch]] dir and return the file path — query
+    * construction is action-free once warm (PlanGuardSpec), and the
+    * files go with the memoized path on `Caches.clear`.
     */
-  private[queries] lazy val scratch: String = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(); ()
+  private def sink(s: SparkSession, dir: String, kind: String, name: String)(
+      write: String => Unit): String =
+    graft.Caches.memoSide(s, dir, kind) {
+      val p = graft.Scratch.dirFor(s, kind).resolve(name).toString
+      write(p)
+      p
     }
-    val root = sys.env.get("SPARK_GRAFT_SCRATCH") match {
-      case Some(user) =>
-        // User-supplied dir may pre-exist with unrelated contents: clean
-        // up ONLY the subtrees our sinks write, never the root itself.
-        val p = java.nio.file.Paths.get(user)
-        java.nio.file.Files.createDirectories(p)
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          Seq("csv", "json", "orc", "parts").foreach(sub =>
-            rm(p.resolve(sub).toFile))))
-        p
-      case None =>
-        // Self-created temp dir: safe to delete recursively on exit.
-        val p = java.nio.file.Files.createTempDirectory("graft_scratch")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => rm(p.toFile)))
-        p
-    }
-    root.toString
-  }
 
   /** CSV round-trip fidelity: parquet → to_csv → read_csv(schema) ≡
     * parquet. Distributed on both legs (no coalesce; reader splits
-    * files). The sink writes are memoized per (session, corpus) —
-    * query construction is action-free once warm (PlanGuardSpec), and
-    * the scratch files are identical on every rewrite anyway.
+    * files). The sink writes are memoized per (session, corpus).
     */
   def qCsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val src = Tables.nation(s, dir)
-    val tmp = s"$scratch/csv/nation"
-    graft.Caches.memoSide(s, dir, "ioq_write_csv")(Io.writeCsv(src, tmp))
+    val tmp = sink(s, dir, "ioq_write_csv", "nation")(Io.writeCsv(src, _))
     val full = Io.readCsv(s, tmp, schema = Some(src.schema))
     // skiprows leg (csv.py:16,39): a SINGLE headerless file in key order
     // (skiprows needs a defined "first N lines"), re-read skipping the
     // first two data lines — the survivors are exactly n_nationkey >= 2.
-    val tmpSkip = s"$scratch/csv/nation_skip"
-    graft.Caches.memoSide(s, dir, "ioq_write_csv_skip")(
+    val tmpSkip = sink(s, dir, "ioq_write_csv_skip", "nation_skip")(
       src.repartition(1).sortWithinPartitions("n_nationkey")
-        .write.option("header", "false").mode("overwrite").csv(tmpSkip))
+        .write.option("header", "false").mode("overwrite").csv(_))
     val skipped = Io.readCsv(s, tmpSkip, header = false,
       schema = Some(src.schema), skiprows = 2)
     full.withColumn("leg", lit("full"))
@@ -84,8 +61,7 @@ object IoQ extends QueryModule {
     */
   def qJsonRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val src = Tables.region(s, dir)
-    val tmp = s"$scratch/json/region"
-    graft.Caches.memoSide(s, dir, "ioq_write_json")(Io.writeJson(src, tmp))
+    val tmp = sink(s, dir, "ioq_write_json", "region")(Io.writeJson(src, _))
     Io.readJson(s, tmp, schema = Some(src.schema))
       .select(src.columns.toIndexedSeq.map(col): _*)
       .orderBy("r_regionkey")
@@ -94,8 +70,7 @@ object IoQ extends QueryModule {
   /** ORC round-trip: the columnar alternative container. */
   def qOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val src = Tables.supplier(s, dir)
-    val tmp = s"$scratch/orc/supplier"
-    graft.Caches.memoSide(s, dir, "ioq_write_orc")(Io.writeOrc(src, tmp))
+    val tmp = sink(s, dir, "ioq_write_orc", "supplier")(Io.writeOrc(src, _))
     Io.readOrc(s, tmp).select(src.columns.toIndexedSeq.map(col): _*)
       .orderBy("s_suppkey")
   }

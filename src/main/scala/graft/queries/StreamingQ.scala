@@ -319,7 +319,7 @@ object StreamingQ extends QueryModule {
   def qStreamUpsert(s: SparkSession, dir: String): DataFrame = {
     // one state root shared by the per-batch merge and the final read;
     // lazy so a warm (memo-hit) construction never allocates scratch
-    lazy val state = graft.streaming.StreamScratch.dirFor(s, "upsert_state")
+    lazy val state = graft.Scratch.dirFor(s, "upsert_state")
     // Version election via a one-line COMMIT LOG (`_LATEST`, swapped in
     // by atomic rename after the version's data write completes), not a
     // directory listing: listings are eventually consistent on object
@@ -374,10 +374,9 @@ object StreamingQ extends QueryModule {
     graft.Caches.memoSide(s, dir, "sink_compacted") {
       val sunk = StreamDrain.drainedFiles(s, dir, "stream_shard_sink",
         "documents")(st => st)
-      // Session-scoped scratch (StreamScratch): the dir is reclaimed on
-      // cache invalidation, not parked until JVM exit — a long-lived JVM
-      // cycling sessions no longer accumulates compaction output.
-      val out = graft.streaming.StreamScratch.dirFor(s, "compact")
+      // Session-scoped scratch: the dir goes with this side value on
+      // Caches.clear, not parked until JVM exit.
+      val out = graft.Scratch.dirFor(s, "compact")
       graft.sources.Io.compactedParquet(sunk, s"$out/data", "doc_id", 4)
       s.read.parquet(s"$out/data")
     }

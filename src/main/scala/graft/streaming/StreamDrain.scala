@@ -55,7 +55,7 @@ object StreamDrain {
     graft.Caches.memo(s, dir, kind) {
       val (watch, schema) = watchDirFor(s, dir, kind, table)
       extra.foreach { df =>
-        val tmp = StreamScratch.dirFor(s, s"extra_$kind")
+        val tmp = graft.Scratch.dirFor(s, s"extra_$kind")
         df.write.mode("overwrite").parquet(s"$tmp/w")
         val st = Files.list(Paths.get(s"$tmp/w"))
         try {
@@ -94,10 +94,10 @@ object StreamDrain {
       stages: Seq[DataFrame], perTrigger: Int, mode: String)(
       build: DataFrame => DataFrame): DataFrame =
     graft.Caches.memo(s, dir, kind) {
-      val watch = StreamScratch.dirFor(s, s"stream_$kind")
+      val watch = graft.Scratch.dirFor(s, s"stream_$kind")
       val schema = stages.head.schema
       stages.zipWithIndex.foreach { case (df, i) =>
-        val tmp = StreamScratch.dirFor(s, s"stage_${kind}_$i")
+        val tmp = graft.Scratch.dirFor(s, s"stage_${kind}_$i")
         df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/w")
         // exactly ONE part file per stage (explicit, was implicit in the
         // coalesce(1) above — ADVICE r12): a multi-part stage would
@@ -153,7 +153,7 @@ object StreamDrain {
       build: DataFrame => DataFrame): DataFrame =
     graft.Caches.memoSide(s, dir, kind) {
       val (watch, schema) = watchDirFor(s, dir, kind, table)
-      val out = StreamScratch.dirFor(s, s"sink_$kind")
+      val out = graft.Scratch.dirFor(s, s"sink_$kind")
       val q = build(s.readStream.schema(schema).parquet(watch))
         .writeStream.format("parquet")
         .option("path", s"$out/data")
@@ -182,7 +182,7 @@ object StreamDrain {
       val q = s.readStream.schema(schema).parquet(watch)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation",
-          StreamScratch.dirFor(s, s"chk_$kind").toString)
+          graft.Scratch.dirFor(s, s"chk_$kind").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       try require(q.awaitTermination(DrainTimeoutMs),
@@ -199,7 +199,7 @@ object StreamDrain {
       table: String): (String, org.apache.spark.sql.types.StructType) = {
     val srcPath = s"$dir/$table.parquet"
     val schema = s.read.parquet(srcPath).schema
-    val watch = StreamScratch.dirFor(s, s"stream_$kind")
+    val watch = graft.Scratch.dirFor(s, s"stream_$kind")
     val src = Paths.get(srcPath)
     if (Files.isDirectory(src)) {
       val st = Files.list(src)

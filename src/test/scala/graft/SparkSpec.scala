@@ -10,31 +10,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * hash-order-nondeterministic ops and float tolerance.
   */
 object SparkSpec {
-  /** One scratch root for the whole test JVM, recursively deleted on
-    * exit — specs that write files use [[SparkSpec.tmpDir]] instead of
-    * leaking a fresh `Files.createTempDirectory` per test run.
-    */
-  lazy val scratch: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_test_scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(root.toFile)
-    }))
-    root
-  }
-
   lazy val spark: SparkSession = Session.start(Session.Profile.Test)
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
 
-  /** A unique subdirectory under the JVM-wide auto-cleaned scratch. */
+  /** A unique subdirectory under the JVM's scratch root ([[Scratch]]),
+    * deleted at exit — specs that write files use this instead of
+    * leaking a fresh `Files.createTempDirectory` per test run.
+    */
   def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(SparkSpec.scratch, prefix).toString
+    java.nio.file.Files.createTempDirectory(Scratch.root, prefix).toString
 
   /** Normalize a row for comparison: floats rounded to `places`. */
   private def norm(r: Row, places: Int): Seq[Any] =

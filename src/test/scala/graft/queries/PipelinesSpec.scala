@@ -111,7 +111,7 @@ class PipelinesSpec extends SparkSpec {
     // the dim must come from a source with a real (non-constant-folded)
     // filter — a LocalRelation folds the predicate away and the pruning
     // rule sees no selective filter to propagate
-    val dimPath = s"${graft.SparkSpec.scratch}/dpp_dim"
+    val dimPath = tmpDir("dpp") + "/dim"
     Seq(("purchase", 1), ("view", 0), ("click", 0))
       .toDF("event_type", "keep")
       .write.mode("overwrite").parquet(dimPath)
@@ -166,20 +166,21 @@ class PipelinesSpec extends SparkSpec {
     }
   }
 
-  test("posting-index append maintenance: idempotent, side caches evicted") {
+  test("posting-index append maintenance: idempotent, side caches kept") {
     // Reset the artifact chain first: an earlier suite in this shared
     // session (PlanGuardSpec builds every registered query's plan, and
     // building qDedupIndexAppend executes the merge) may already have
     // committed the append — which would send the first run below down
-    // the empty-increment no-op path with zero evictions. clearAll puts
-    // the session back at the pre-append state regardless of suite order.
+    // the empty-increment no-op path and never call replace. clearAll
+    // puts the session back at the pre-append state regardless of suite
+    // order.
     graft.Caches.clearAll()
     @volatile var computed = 0
     def side(): Int =
       graft.Caches.memoSide(spark, sf, "append_probe") { computed += 1; computed }
     assert(side() == 1 && side() == 1, "memoSide computes once per key")
     val first = Fingerprints.qDedupIndexAppend(spark, sf).collect().toSeq
-    assert(side() == 2, "the append's replace must evict memoSide values")
+    assert(side() == 1, "the append's replace must swap only its own artifact")
     // re-running re-merges the batch into the already-merged artifact;
     // the (doc_id, h) re-dedup makes that a no-op, like MERGE INTO
     val second = Fingerprints.qDedupIndexAppend(spark, sf).collect().toSeq

@@ -114,8 +114,9 @@ class IoSpec extends SparkSpec {
   }
 
   test("compaction rewrites a fragmented dataset into few sorted bounded files") {
-    val frag = s"${graft.SparkSpec.scratch}/compact_frag"
-    val tidy = s"${graft.SparkSpec.scratch}/compact_tidy"
+    val base = tmpDir("compact")
+    val frag = s"$base/frag"
+    val tidy = s"$base/tidy"
     // fragment: 5000 rows sprayed across 40 files
     spark.range(5000).toDF("id").repartition(40)
       .write.mode("overwrite").parquet(frag)
@@ -140,24 +141,48 @@ class IoSpec extends SparkSpec {
 
   test("stream scratch dirs are session-scoped: a second session in the " +
       "same JVM leaves no orphans after its caches clear") {
-    import graft.streaming.StreamScratch
+    import java.nio.file.Files
+    import graft.Scratch
+    import graft.queries.{Fingerprints, IoQ, StreamingQ}
+    val sf = graft.PlanShapeSpec.SfDir
     // Two sessions in one JVM (the long-lived-driver shape): each
-    // allocates sink/compaction scratch; invalidating ONE session's
-    // caches reclaims exactly its dirs and leaves the other's intact —
-    // the contract that replaced the deleteOnExit no-op (which parked
-    // every drain's parquet in /tmp until process exit).
-    val s2 = spark.newSession()
-    val a = StreamScratch.dirFor(spark, "compact_probe")
-    val b = StreamScratch.dirFor(s2, "compact_probe")
-    java.nio.file.Files.write(a.resolve("x.parquet"), Array[Byte](1, 2))
-    java.nio.file.Files.write(b.resolve("x.parquet"), Array[Byte](3, 4))
-    assert(StreamScratch.tracked(s2).nonEmpty)
+    // allocates scratch; clearing ONE session's caches reclaims exactly
+    // its dirs and leaves the other's intact — the contract that
+    // replaced the deleteOnExit no-op (which parked every drain's
+    // parquet in /tmp until process exit).
+    val s2 = graft.Tables.prep(spark.newSession())
+    val a = Scratch.dirFor(spark, "compact_probe")
+    val b = Scratch.dirFor(s2, "compact_probe")
+    Files.write(a.resolve("x.parquet"), Array[Byte](1, 2))
+    Files.write(b.resolve("x.parquet"), Array[Byte](3, 4))
+    // a query's write-once sink is session scratch too: the CSV round
+    // trip's dir is tracked for s2 and goes with its clear
+    IoQ.qCsvRoundtrip(s2, sf).collect()
+    val csv = Scratch.tracked(s2).filter(p => Files.exists(p.resolve("nation")))
+    assert(csv.nonEmpty, s"CSV sink not tracked for its session: ${Scratch.tracked(s2)}")
     graft.Caches.clear(s2)
-    assert(!java.nio.file.Files.exists(b), "second session's dir orphaned")
-    assert(StreamScratch.tracked(s2).isEmpty)
-    assert(java.nio.file.Files.exists(a.resolve("x.parquet")),
+    assert(!Files.exists(b), "second session's dir orphaned")
+    assert(csv.forall(!Files.exists(_)), s"CSV sink orphaned: $csv")
+    assert(Scratch.tracked(s2).isEmpty)
+    assert(Files.exists(a.resolve("x.parquet")),
       "first session's dir must survive the other session's clear")
     graft.Caches.clear(spark)
-    assert(!java.nio.file.Files.exists(a))
+    assert(!Files.exists(a))
+    // Only clear releases: the append's first, non-empty merge after a
+    // clearAll replaces its own artifact and nothing else, so the
+    // drains' memoized sinks stand and re-constructing them allocates
+    // no new dirs.
+    graft.Caches.clearAll()
+    def drains(): Unit = {
+      StreamingQ.qStreamUpsert(spark, sf)
+      StreamingQ.qStreamShardSink(spark, sf)
+      StreamingQ.qSinkCompaction(spark, sf); ()
+    }
+    drains()
+    val before = Scratch.tracked(spark)
+    Fingerprints.qDedupIndexAppend(spark, sf).collect()
+    drains()
+    assert(Scratch.tracked(spark).toSet == before.toSet,
+      s"the append grew the session's scratch: ${before.size} -> ${Scratch.tracked(spark).size} dirs")
   }
 }
