@@ -116,7 +116,7 @@ object StreamingQ extends QueryModule {
     * never flush and is filtered from the result.
     */
   private def sessionSentinel(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = graft.Tables.load(s, dir, "events")
     val bumpUs = Windows.SessionGapUs + 3600L * 1000000L
     val bumped = raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", col("ts") + lit(bumpUs * 1000L))

@@ -43,10 +43,10 @@ object StreamDrain {
     *               watch dir (same schema as the source) — the heartbeat
     *               / sentinel hook event-time-timeout drains need to push
     *               the final watermark past every pending timeout.
-    *               BY-NAME: building the sentinel frame reads the source
-    *               schema (a job), which must only happen inside the
-    *               once-per-corpus memo, never on warm re-construction
-    *               (the PlanGuard action-free contract).
+    *               BY-NAME: the sentinel frame is only ever written into
+    *               the watch dir, so it is built inside the
+    *               once-per-corpus memo and not on warm re-construction,
+    *               where it would be analyzed for nothing.
     * @param build  the streaming transform
     */
   def drained(s: SparkSession, dir: String, kind: String, table: String,
@@ -198,7 +198,7 @@ object StreamDrain {
   private def watchDirFor(s: SparkSession, dir: String, kind: String,
       table: String): (String, org.apache.spark.sql.types.StructType) = {
     val srcPath = s"$dir/$table.parquet"
-    val schema = s.read.parquet(srcPath).schema
+    val schema = graft.Tables.load(s, dir, table).schema
     val watch = graft.Scratch.dirFor(s, s"stream_$kind")
     val src = Paths.get(srcPath)
     if (Files.isDirectory(src)) {

@@ -1,0 +1,76 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.types.{LongType, TimestampType}
+
+/** `Tables.load` opens each relation with the schema of its parquet
+  * footer, read on the driver: the schema must be the one `spark.read`
+  * infers, for the testdata's single files and for Spark-written
+  * directories, and registering the tables must run no Spark job.
+  */
+class TablesSpec extends SparkSpec {
+
+  private def inferred(dir: String, name: String) =
+    spark.read.parquet(s"$dir/$name.parquet").schema
+
+  test("footer schema equals the inferred schema for every testdata table") {
+    for (dir <- Seq(PlanShapeSpec.SfDir, "/root/testdata/sf0.001");
+         name <- Tables.names)
+      assert(Tables.load(spark, dir, name).schema == inferred(dir, name),
+        s"$dir/$name")
+  }
+
+  test("footer schema equals the inferred schema for a Spark-written 3-file directory") {
+    val dir = tmpDir("tables")
+    val path = s"$dir/mixed.parquet"
+    spark.range(30).selectExpr(
+      "cast(id as int) as i", "id as l", "cast(id as short) as sh",
+      "cast(id as byte) as b", "cast(id as decimal(38,0)) as d38",
+      "cast(id / 4 as decimal(10,2)) as d10", "id / 3.0d as dbl",
+      "cast(id as float) / 7 as f",
+      "timestamp_micros(id * 1000003) as ts",
+      "cast(timestamp_micros(id * 1000003) as timestamp_ntz) as ntz",
+      "date_add(date'2020-01-01', cast(id as int)) as dt",
+      "array(cast(id as float), 1.5f) as arr", "map('k', id) as m",
+      "named_struct('a', id, 'b', cast(id as string)) as st",
+      "cast(id as string) as s", "cast(cast(id as string) as binary) as bin",
+      "id % 2 = 0 as flag")
+      .repartition(3).write.parquet(path)
+    assert(Files.list(Paths.get(path)).toArray
+      .count(_.toString.endsWith(".parquet")) == 3)
+    val df = Tables.load(spark, dir, "mixed")
+    assert(df.schema.length == 17)
+    assert(df.schema == inferred(dir, "mixed"))
+    assert(df.count() == 30)
+  }
+
+  test("loading the ten tables and constructing q1_agg runs no Spark job") {
+    val fresh = Tables.prep(spark.newSession())
+    val sc = fresh.sparkContext
+    val group = s"tables-${java.util.UUID.randomUUID()}"
+    try {
+      sc.setJobGroup(group, "TablesSpec job-free registration")
+      val events = try {
+        Tables.names.foreach(Tables.load(fresh, PlanShapeSpec.SfDir, _))
+        SparkEntry.queries("q1_agg")(fresh, PlanShapeSpec.SfDir)
+        Tables.events(fresh, PlanShapeSpec.SfDir)
+      } finally sc.clearJobGroup()
+      // the status store is fed by the async listener bus — let it drain
+      Thread.sleep(2000)
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+      assert(events.schema("ts").dataType == TimestampType)
+      assert(events.schema("ts_ns").dataType == LongType)
+    } finally Caches.clear(fresh)
+  }
+
+  test("a directory with no data file fails naming the directory") {
+    val dir = tmpDir("tables")
+    val path = Paths.get(dir, "empty.parquet")
+    Files.createDirectories(path)
+    Files.write(path.resolve("_SUCCESS"), Array.emptyByteArray)
+    Files.write(path.resolve(".part-0.parquet.crc"), Array.emptyByteArray)
+    val e = intercept[IllegalArgumentException](Tables.load(spark, dir, "empty"))
+    assert(e.getMessage.contains(path.toString))
+  }
+}
