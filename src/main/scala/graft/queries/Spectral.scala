@@ -1,19 +1,20 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Distributed spectral / linear-algebra steps over the embedding
   * corpus — the training half of PCA-style dimensionality reduction:
   * the d×d Gram matrix Xᵀ X as ONE corpus pass (the only part that
   * touches the data; shuffle and output are dims²-sized, independent
   * of corpus rows — the "mergeable summary" shape every distributed
-  * PCA/SVD implementation reduces to), and a power-iteration step
-  * toward the dominant eigenvector computed entirely from that
-  * dims²-sized artifact (corpus never re-read — in production this
-  * half is a driver-side LAPACK call; expressing it relationally here
-  * keeps it oracle-checkable).
+  * PCA/SVD implementation reduces to), and power iteration toward the
+  * dominant eigenvector from that dims²-sized artifact alone: one step
+  * relationally, three rounds on the driver (the production shape).
   *
   * Numerics: vectors quantize to 2⁸-scaled BIGINTs — coarser than the
   * similarity family's 2²⁰ ON PURPOSE, so the CHAINED products of the
@@ -62,10 +63,7 @@ object Spectral extends QueryModule {
     * eigenvector direction is v₂/‖v₂‖).
     */
   def qPcaPower(s: SparkSession, dir: String): DataFrame = {
-    val tri = gram(s, dir)
-    val full = tri.select(col("i"), col("j"), col("g"))
-      .union(tri.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("g")))
+    val full = fullGram(s, dir)
     val v1 = full.filter(col("j") === 0)
       .select(col("i").as("k"), col("g").as("v1"))
     // The g·v1 products grow ~ d·(n·q²)² — quadratic in corpus rows —
@@ -92,71 +90,65 @@ object Spectral extends QueryModule {
         .select(col("j").as("i"), col("i").as("j"), col("g")))
   }
 
-  /** Integer re-quantization between power rounds: q = sign(v) ·
-    * ⌊|v|·2⁸ / max|v|⌋ — the normalization that keeps the iterate's
-    * magnitude FIXED across rounds (raw G·G·G·e₀ grows as ~(n·q²)³ and
-    * leaves int64 immediately), while staying an exact integer both
-    * engines compute identically (abs keeps the floor division on
-    * non-negatives, where Spark `DIV` ≡ DuckDB `//`; on negatives one
-    * truncates and the other floors). The direction the eigen-iteration
-    * converges to is scale-invariant, so quantizing is just a coarser
-    * float normalization.
-    */
-  private def quantize(v: DataFrame): DataFrame = {
-    val m = v.agg(greatest(max(abs(col("v"))), lit(1L)).as("vmax"))
-    v.crossJoin(broadcast(m))
-      .select(col("k"),
-        (expr("CAST(sign(v) AS BIGINT)") *
-          expr("(abs(v) * 256L) DIV vmax")).as("q"))
-  }
-
-  /** Power iteration run to (telemetered) convergence: THREE unrolled
-    * G·v rounds from the memoized Gram artifact, re-quantized between
-    * rounds ([[quantize]]) and lineage-cut with `localCheckpoint` per
-    * round (the walk_mass BSP pattern — each round's plan reads a
-    * 64-row checkpoint, not the whole unrolled chain). Output: the
-    * quantized iterate after each round plus the round-3 Rayleigh
-    * quotient ρ = qᵀGq/qᵀq (quantized to ‰, numerator carried in
-    * DECIMAL(38,0)/HUGEINT) — the convergence gauge: successive ρ
-    * values stabilize at the dominant eigenvalue, and SpectralSpec
-    * asserts both brute-force parity and the monotone Rayleigh growth
-    * the iteration guarantees on a PSD matrix. Every frame involved is
-    * d- or d²-sized; the corpus is only touched by the Gram build.
+  /** Power iteration run to (telemetered) convergence: the memoized
+    * Gram triangle is collected in ONE job and [[power3]] runs three
+    * rounds on the driver (as MLlib's `RowMatrix` PCA: Gramian
+    * distributed, eigen step local). Output, a local relation in `i`
+    * order: the quantized iterate after each round plus the round-3
+    * Rayleigh quotient ρ = qᵀGq/qᵀq in ‰ — the convergence gauge whose
+    * monotone growth on a PSD matrix SpectralSpec asserts. Memoized as
+    * a derived artifact: the collect is a job, and construction must be
+    * action-free once warm (PlanGuardSpec).
     */
   def qPcaPower2(s: SparkSession, dir: String): DataFrame =
-    // per-round checkpoints make construction action-ful — memoized as
-    // a derived artifact (PlanGuardSpec), same as the BSP loops
     graft.Caches.memoSide(s, dir, "q_pca_power2_result") {
-      qPcaPower2Build(s, dir)
+      val g = Array.ofDim[Long](Dim, Dim)
+      gram(s, dir).collect().foreach { r =>
+        val (i, j) = (r.getAs[Int]("i"), r.getAs[Int]("j"))
+        g(i)(j) = r.getAs[Long]("g"); g(j)(i) = g(i)(j)
+      }
+      s.createDataFrame(power3(g).asJava, Power2Schema)
     }
 
-  private def qPcaPower2Build(s: SparkSession, dir: String): DataFrame = {
-    val full = fullGram(s, dir)
-    def matvec(q: DataFrame): DataFrame =
-      full.join(broadcast(q), col("j") === col("k"))
-        .groupBy("i")
-        .agg(sum(col("g").cast("decimal(38,0)") * col("q")).cast("long").as("v"))
-        .select(col("i").as("k"), col("v"))
-    val v1 = full.filter(col("j") === 0).select(col("i").as("k"), col("g").as("v"))
-    // localCheckpoint per round is measurably the right call even at
-    // d=64: without it the quantize agg-in-crossJoin subplans re-derive
-    // combinatorially across rounds (5.2 s vs 1.9 s measured at sf0.01)
-    val q1 = quantize(v1).localCheckpoint()
-    val q2 = quantize(matvec(q1)).localCheckpoint()
-    val q3 = quantize(matvec(q2)).localCheckpoint()
-    val num = full
-      .join(broadcast(q3.select(col("k").as("i"), col("q").as("qa"))), Seq("i"))
-      .join(broadcast(q3.select(col("k").as("j"), col("q").as("qb"))), Seq("j"))
-      .agg(sum(col("qa").cast("decimal(38,0)") * col("g") * col("qb")).as("rn"))
-    val den = q3.agg(sum(col("q") * col("q")).as("rd"))
-    q1.select(col("k").as("i"), col("q").as("q1"))
-      .join(q2.select(col("k").as("i"), col("q").as("q2")), Seq("i"))
-      .join(q3.select(col("k").as("i"), col("q").as("q3")), Seq("i"))
-      .crossJoin(broadcast(num)).crossJoin(broadcast(den))
-      .select(col("i"), col("q1"), col("q2"), col("q3"),
-        when(col("rd") === 0L, lit(null).cast("long"))
-          .otherwise(expr("CAST((rn * 1000) DIV rd AS BIGINT)")).as("rho_milli"))
-      .orderBy("i")
+  private val Power2Schema = StructType(
+    StructField("i", IntegerType, nullable = false) +:
+      Seq("q1", "q2", "q3", "rho_milli").map(StructField(_, LongType)))
+
+  /** The three rounds of [[qPcaPower2]] over a symmetric d×d matrix,
+    * as the oracle SQL spells them. Each round re-quantizes the iterate
+    * to q = sign(v)·⌊|v|·2⁸ / max(max|v|, 1)⌋, keeping its magnitude
+    * FIXED (raw G·G·G·e₀ grows as ~(n·q²)³) and every value an exact
+    * integer (the division runs on non-negatives, where truncation and
+    * the oracle's `//` agree). Matvec sums and the Rayleigh numerator
+    * are carried in BigInt (the oracle's HUGEINT); a value leaving int64
+    * throws naming its step, as the oracle's cast to BIGINT does.
+    * rho_milli is NULL when q3 is all zero.
+    */
+  private[queries] def power3(g: Array[Array[Long]]): Seq[Row] = {
+    val d = g.indices
+    def int64[T](step: String)(v: => T): T =
+      try v catch {
+        case e: ArithmeticException =>
+          throw new ArithmeticException(s"q_pca_power2 $step leaves int64 (${e.getMessage})")
+      }
+    def quantize(round: Int, v: Array[Long]): Array[Long] =
+      int64(s"round $round quantize") {
+        val vmax = math.max(v.map(x => Math.absExact(x)).max, 1L)
+        v.map(x => java.lang.Long.signum(x) * (Math.multiplyExact(math.abs(x), 256L) / vmax))
+      }
+    def matvec(round: Int, q: Array[Long]): Array[Long] =
+      int64(s"round $round matvec") {
+        d.map(i => d.map(j => BigInt(g(i)(j)) * q(j)).sum.bigInteger.longValueExact).toArray
+      }
+    val q1 = quantize(1, d.map(g(_)(0)).toArray)
+    val q2 = quantize(2, matvec(2, q1))
+    val q3 = quantize(3, matvec(3, q2))
+    val num = (for (i <- d; j <- d) yield BigInt(q3(i)) * g(i)(j) * q3(j)).sum
+    val den = q3.map(x => x * x).sum
+    val rho: java.lang.Long =
+      if (den == 0) null
+      else int64("Rayleigh quotient")((num * 1000 / den).bigInteger.longValueExact)
+    d.map(i => Row(i, q1(i), q2(i), q3(i), rho))
   }
 
   override def prewarm(s: SparkSession, dir: String): Unit = {

@@ -280,7 +280,8 @@ class PropertiesSpec extends SparkSpec {
       "robust_stats" -> (() => queries.CorpusStats.qRobustStats(spark, sf).collect().toSeq),
       // round-7: the block-decomposition rolling extrema (block-keyed
       // windows + position joins), the re-quantized 3-round power
-      // iteration (integer floor-divisions must not see layout), the
+      // iteration (solved on the driver: only its Gram rebuild can see
+      // layout), the
       // frame-API compare/isna/list legs, and the size-scaled exact
       // all-pairs grid (K from the artifact count)
       "pca_power2" -> (() => queries.Spectral.qPcaPower2(spark, sf).collect().toSeq),

@@ -1,9 +1,13 @@
 package graft.queries
 
-import graft.SparkSpec
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+
+import graft.{Caches, SparkSpec, Tables}
 
 /** Brute-force parity and matrix-property specs for the spectral
-  * module (Gram matrix + power-iteration step).
+  * module (Gram matrix + power-iteration step), plus the driver-side
+  * rounds of the 3-round iteration on hand-built matrices.
   */
 class SpectralSpec extends SparkSpec {
 
@@ -86,5 +90,65 @@ class SpectralSpec extends SparkSpec {
       assert(r.getAs[Long]("v1") == v1(i), s"v1[$i]")
       assert(r.getAs[Long]("v2") == v2(i), s"v2[$i]")
     }
+  }
+
+  test("3-round power iteration builds with one job from the warm Gram; warm reads run none") {
+    val fresh = Tables.prep(spark.newSession())
+    val sc = fresh.sparkContext
+    def jobs(body: => Unit): Int = {
+      val group = s"spectral-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, "SpectralSpec job count")
+      try body finally sc.clearJobGroup()
+      // the status store is fed by the async listener bus — let it drain
+      Thread.sleep(2000)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    try {
+      Spectral.prewarm(fresh, dir)
+      assert(jobs(Spectral.qPcaPower2(fresh, dir)) == 1, "build: the Gram collect")
+      assert(jobs(Spectral.qPcaPower2(fresh, dir).collect()) == 0, "warm construction + collect")
+    } finally Caches.clear(fresh)
+  }
+
+  test("3-round power iteration keeps its schema") {
+    assert(Spectral.qPcaPower2(spark, dir).schema == StructType(Seq(
+      StructField("i", IntegerType, nullable = false),
+      StructField("q1", LongType, nullable = true),
+      StructField("q2", LongType, nullable = true),
+      StructField("q3", LongType, nullable = true),
+      StructField("rho_milli", LongType, nullable = true))))
+  }
+
+  private def cols(rows: Seq[Row], c: Int): Seq[Long] =
+    rows.map(_.getLong(c))
+
+  test("power3: a zero matrix gives zero iterates and a NULL Rayleigh quotient") {
+    val rows = Spectral.power3(Array.ofDim[Long](4, 4))
+    assert(rows.map(_.getInt(0)) == (0 until 4))
+    for (c <- 1 to 3) assert(cols(rows, c) == Seq.fill(4)(0L), s"q$c")
+    assert(rows.forall(_.isNullAt(4)))
+  }
+
+  test("power3: negative entries quantize as sign times the truncated magnitude") {
+    // column 0 is v1 = (-3, -2, 1): vmax 3, so -2 gives -(512 DIV 3) =
+    // -170 (a floor division would give -171)
+    val g = Array(Array(-3L, -2L, 1L), Array(-2L, 0L, 0L), Array(1L, 0L, 0L))
+    val rows = Spectral.power3(g)
+    assert(cols(rows, 1) == Seq(-256L, -170L, 85L))
+    // G·q1 = (1193, 512, -256): vmax 1193
+    assert(cols(rows, 2) == Seq(256L, 109L, -54L))
+    // G·q2 = (-1040, -512, 256): vmax 1040
+    assert(cols(rows, 3) == Seq(-256L, -126L, 63L))
+  }
+
+  test("power3: a value leaving int64 throws naming the step") {
+    val g = Array.ofDim[Long](2, 2)
+    g(0)(0) = Long.MaxValue - 1
+    val e = intercept[ArithmeticException](Spectral.power3(g))
+    assert(e.getMessage.contains("round 1 quantize"), e.getMessage)
+    // 2⁵⁴·2⁸ still fits, but round 2's row sums 2·2⁵⁴·256 = 2⁶³ do not
+    val h = Array.fill(2, 2)(1L << 54)
+    val e2 = intercept[ArithmeticException](Spectral.power3(h))
+    assert(e2.getMessage.contains("round 2 matvec"), e2.getMessage)
   }
 }
