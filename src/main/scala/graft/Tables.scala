@@ -1,11 +1,15 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Table loaders over the driver-generated parquet testdata
   * (see /root/repo/TESTDATA.md). Every query in [[SparkEntry.queries]]
@@ -52,28 +56,37 @@ object Tables {
       spark.read.schema(footerSchema(spark, path)).parquet(path)
     }
 
-  /** Schema of the first data file under `path` (by name, skipping the
-    * `_`/`.`-prefixed markers and checksums a Spark write leaves), as
+  /** Schema of the first data file under `path` ([[dataFiles]]), as
     * `spark.read` would infer it without schema merging. The converter
     * takes the session conf, so `prep`'s `nanosAsLong` applies.
     */
   private def footerSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val file =
-      if (!fs.getFileStatus(root).isDirectory) root
-      else fs.listStatus(root).iterator.filter(_.isFile)
-        .map(_.getPath)
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .minByOption(_.getName)
-        .getOrElse(throw new IllegalArgumentException(
-          s"Unable to read a parquet schema from $path: no data file"))
+    val file = dataFiles(Paths.get(path)).headOption
+      .map(f => new org.apache.hadoop.fs.Path(f.toString))
+      .getOrElse(throw new IllegalArgumentException(
+        s"Unable to read a parquet schema from $path: no data file"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     val footer = try reader.getFooter finally reader.close()
     ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
+
+  /** The data files of a parquet `path`: the path itself when it is a
+    * file, else the files of the Spark-written directory whose names do
+    * not start with `_` or `.` (the `_SUCCESS` marker, `_spark_metadata`
+    * and the `.crc` checksums a write leaves), sorted by name.
+    */
+  def dataFiles(path: Path): Seq[Path] =
+    if (!Files.isDirectory(path)) Seq(path)
+    else {
+      val st = Files.list(path)
+      try st.iterator.asScala.filter { f =>
+        val n = f.getFileName.toString
+        Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+      }.toSeq.sortBy(_.getFileName.toString)
+      finally st.close()
+    }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")
@@ -90,20 +103,32 @@ object Tables {
     * `CAST(ts AS TIMESTAMP)` reads on the same file — plus the raw nanos
     * as `ts_ns: long` for ordinal arithmetic.
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
-    val raw = load(spark, sfDir, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumnRenamed("ts", "ts_ns")
-          .withColumn("ts", timestamp_micros(expr("ts_ns DIV 1000")))
-      case _ =>
-        // NTZ→TIMESTAMP under the UTC session zone preserves the micros
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-          .withColumn("ts_ns", unix_micros(col("ts")) * 1000L)
-    }
-  }
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    eventsTs(load(spark, sfDir, "events"))
+
+  /** The [[events]] normalization of a frame in the events file's own
+    * schema — a plain projection, so it applies as well to a streaming
+    * file source over the same files.
+    */
+  def eventsTs(raw: DataFrame): DataFrame =
+    if (tsIsNanos(raw))
+      raw.withColumnRenamed("ts", "ts_ns")
+        .withColumn("ts", timestamp_micros(expr("ts_ns DIV 1000")))
+    else
+      // NTZ→TIMESTAMP under the UTC session zone preserves the micros
+      raw.withColumn("ts", col("ts").cast("timestamp"))
+        .withColumn("ts_ns", unix_micros(col("ts")) * 1000L)
+
+  /** `raw` (the events file's own schema) with `ts` moved `seconds`
+    * later, in the same physical shape — rows to stage beside the file.
+    */
+  def shiftEventsTs(raw: DataFrame, seconds: Long): DataFrame =
+    if (tsIsNanos(raw)) raw.withColumn("ts", col("ts") + lit(seconds * 1000000000L))
+    else raw.withColumn("ts", col("ts") + expr(s"INTERVAL $seconds seconds"))
+
+  private def tsIsNanos(raw: DataFrame): Boolean =
+    raw.schema("ts").dataType == LongType
+
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 }

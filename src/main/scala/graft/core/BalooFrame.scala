@@ -186,19 +186,8 @@ final class BalooFrame(val df: DataFrame, val indexCols: Seq[String]) {
   // ---- per-column aggregate row (frame.py:594-639; f64 results) ----
   def aggAll(how: String): DataFrame = {
     require(numericDataCols.nonEmpty, "no numeric data columns to aggregate")
-    val exprs = numericDataCols.map { c =>
-      (how match {
-        case "sum" => sum(col(c))
-        case "prod" => graft.functions.GraftFunctions.prod(col(c))
-        case "min" => min(col(c))
-        case "max" => max(col(c))
-        case "count" => count(col(c))
-        case "mean" => avg(col(c))
-        case "var" => var_samp(col(c))
-        case "std" => stddev_samp(col(c))
-        case other => throw new IllegalArgumentException(s"unknown agg: $other")
-      }).cast("double").as(c)
-    }
+    val exprs = numericDataCols.map(c =>
+      AggByName(how, col(c)).cast("double").as(c))
     df.agg(exprs.head, exprs.tail: _*)
   }
 
@@ -207,17 +196,8 @@ final class BalooFrame(val df: DataFrame, val indexCols: Seq[String]) {
     */
   def agg(aggs: Seq[String]): DataFrame = {
     require(numericDataCols.nonEmpty, "no numeric data columns to aggregate")
-    val exprs = for (a <- aggs; c <- numericDataCols) yield (a match {
-      case "sum" => sum(col(c))
-      case "prod" => graft.functions.GraftFunctions.prod(col(c))
-      case "min" => min(col(c))
-      case "max" => max(col(c))
-      case "count" => count(col(c))
-      case "mean" => avg(col(c))
-      case "var" => var_samp(col(c))
-      case "std" => stddev_samp(col(c))
-      case other => throw new IllegalArgumentException(s"unknown agg: $other")
-    }).cast("double").as(s"${a}__$c")
+    val exprs = for (a <- aggs; c <- numericDataCols)
+      yield AggByName(a, col(c)).cast("double").as(s"${a}__$c")
     val one = df.agg(exprs.head, exprs.tail: _*)
     val stackArgs = aggs.map(a =>
       (s"'$a'" +: numericDataCols.map(c => s"`${a}__$c`")).mkString(", ")).mkString(", ")
@@ -459,21 +439,29 @@ final class BalooGroupBy(frame: BalooFrame, by: Seq[String]) {
   def agg(how: Map[String, String]): BalooFrame = {
     require(how.nonEmpty, "empty aggregation map")
     how.keys.foreach(c => require(frame.df.columns.contains(c), s"KeyError: $c"))
-    val aggs = how.toSeq.sortBy(_._1).map { case (c, a) =>
-      (a match {
-        case "sum" => org.apache.spark.sql.functions.sum(col(c))
-        case "prod" => graft.functions.GraftFunctions.prod(col(c))
-        case "min" => org.apache.spark.sql.functions.min(col(c))
-        case "max" => org.apache.spark.sql.functions.max(col(c))
-        case "count" => count(col(c))
-        case "mean" => avg(col(c))
-        case "var" => var_samp(col(c))
-        case "std" => stddev_samp(col(c))
-        case "nunique" => countDistinct(col(c))
-        case other => throw new IllegalArgumentException(s"unknown agg: $other")
-      }).as(c)
+    val aggs = how.toSeq.sortBy(_._1).map {
+      case (c, "nunique") => countDistinct(col(c)).as(c)
+      case (c, a) => AggByName(a, col(c)).as(c)
     }
     new BalooFrame(
       frame.df.groupBy(by.map(col): _*).agg(aggs.head, aggs.tail: _*), by)
+  }
+}
+
+/** The reference's aggregate names (sum/prod/min/max/count/mean/var/std,
+  * `frame.py:594-666`, `series.py:350-388`) → the one Spark aggregate
+  * each spells; every caller adds its own casts and aliases.
+  */
+private[core] object AggByName {
+  def apply(name: String, c: Column): Column = name match {
+    case "sum" => sum(c)
+    case "prod" => graft.functions.GraftFunctions.prod(c)
+    case "min" => min(c)
+    case "max" => max(c)
+    case "count" => count(c)
+    case "mean" => avg(c)
+    case "var" => var_samp(c)
+    case "std" => stddev_samp(c)
+    case other => throw new IllegalArgumentException(s"unknown agg: $other")
   }
 }

@@ -115,15 +115,8 @@ final class BalooSeries(val df: DataFrame, val indexCols: Seq[String], val name:
   /** Multi-agg → Series keyed by agg name, all f64 (series.py:370-388). */
   def agg(aggs: Seq[String]): DataFrame = {
     val exprs = aggs.map {
-      case "sum" => org.apache.spark.sql.functions.sum(col_).cast("double").as("sum")
-      case "prod" => graft.functions.GraftFunctions.prod(col_).as("prod")
-      case "min" => org.apache.spark.sql.functions.min(col_).cast("double").as("min")
-      case "max" => org.apache.spark.sql.functions.max(col_).cast("double").as("max")
-      case "count" => org.apache.spark.sql.functions.count(col_).cast("double").as("count")
-      case "mean" => avg(col_).cast("double").as("mean")
-      case "var" => var_samp(col_).cast("double").as("var")
-      case "std" => stddev_samp(col_).cast("double").as("std")
-      case other => throw new IllegalArgumentException(s"unknown agg: $other")
+      case "prod" => AggByName("prod", col_).as("prod")
+      case a => AggByName(a, col_).cast("double").as(a)
     }
     val one = df.agg(exprs.head, exprs.tail: _*)
     val stackArgs = aggs.map(a => s"'$a', `$a`").mkString(", ")

@@ -17,8 +17,11 @@ object GraftFunctions {
 
   /** (name, builder) for every custom function we expose. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    // Spark's own `product` aggregate (a DeclarativeAggregate: codegen'd,
+    // map-side partial merge; NULLs skipped, NULL for no input).
     "graft_prod" -> ((children: Seq[Expression]) =>
-      ProductAgg(Cast(children.head, DoubleType))),
+      org.apache.spark.sql.catalyst.expressions.aggregate.Product(
+        Cast(children.head, DoubleType))),
     "graft_erf" -> ((children: Seq[Expression]) =>
       Erf(Cast(children.head, DoubleType))),
     "graft_rollhash" -> ((children: Seq[Expression]) =>

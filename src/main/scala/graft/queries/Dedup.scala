@@ -49,8 +49,8 @@ object Dedup extends QueryModule {
       .orderBy("l_orderkey", "l_linenumber")
 
   /** `drop_duplicates(keep='*')` — product-merge the payload columns
-    * (`weld_ops.py:572-655` merger `*`), via our codegen'd
-    * [[graft.functions.ProductAgg]]. Dup groups are ≤5 rows of qty ≤ 50,
+    * (`weld_ops.py:572-655` merger `*`), via `graft_prod` (Spark's
+    * built-in `Product` aggregate). Dup groups are ≤5 rows of qty ≤ 50,
     * so products stay integer-exact in f64.
     */
   def qDropDupProd(s: SparkSession, dir: String): DataFrame =

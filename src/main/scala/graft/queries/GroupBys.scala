@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * (`baloo/weld/weld_group.py:68-284`); Spark's hash aggregate streams
   * ALL of these with partial (map-side) + final aggregation around one
   * shuffle on the group key, so both families are the same single-pass
-  * plan here — including our custom `graft_prod` DeclarativeAggregate.
+  * plan here — including `graft_prod`, Spark's built-in `Product`
+  * DeclarativeAggregate.
   *
   * Scale: groupBy(low-cardinality keys) partial-aggregates to tiny
   * map-side state before the shuffle, so bytes shuffled ∝ #groups ×

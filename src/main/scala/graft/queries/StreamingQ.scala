@@ -1,9 +1,9 @@
 package graft.queries
 
+import graft.Tables
 import graft.streaming.{StreamDrain, StreamOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Driver-checked STREAMING queries — the windowed aggregates from
   * [[graft.streaming.StreamOps]] run as real Structured Streaming jobs
@@ -18,23 +18,13 @@ import org.apache.spark.sql.types.LongType
   */
 object StreamingQ extends QueryModule {
 
-  /** The same ts normalization [[graft.Tables.events]] applies, as a
-    * stream-safe plan transform (the file source hands us the raw
-    * parquet schema).
-    */
-  private def normTs(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case _ => df.withColumn("ts", col("ts").cast("timestamp"))
-    }
-
   /** Streaming tumbling hourly counts ≡ [[Windows.qWindowTumbling]] —
     * the [[StreamOps.tumblingCounts]] operator verbatim (decimal-exact
     * sums; watermark inert under the complete-mode drain).
     */
   def qStreamTumbling(s: SparkSession, dir: String): DataFrame =
     StreamDrain.drained(s, dir, "stream_tumbling", "events")(st =>
-        StreamOps.tumblingCounts(normTs(st)))
+        StreamOps.tumblingCounts(Tables.eventsTs(st)))
       .orderBy("bucket", "event_type")
 
   /** Streaming sliding 1h/30m windows ≡ [[Windows.qWindowSliding]]:
@@ -43,7 +33,7 @@ object StreamingQ extends QueryModule {
     */
   def qStreamSliding(s: SparkSession, dir: String): DataFrame =
     StreamDrain.drained(s, dir, "stream_sliding", "events")(st =>
-        normTs(st)
+        Tables.eventsTs(st)
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour", "30 minutes"))
           .agg(count(lit(1)).as("n"),
@@ -103,7 +93,7 @@ object StreamingQ extends QueryModule {
         mode = "append") { st =>
       import s.implicits._
       StreamOps.sessionizeClosed(
-        normTs(st).select("event_id", "user_id", "event_type", "value", "ts")
+        Tables.eventsTs(st).select("event_id", "user_id", "event_type", "value", "ts")
           .as[StreamOps.Event],
         Windows.SessionGapUs).toDF()
     }.orderBy("user_id", "session_id")
@@ -116,14 +106,9 @@ object StreamingQ extends QueryModule {
     * never flush and is filtered from the result.
     */
   private def sessionSentinel(s: SparkSession, dir: String): DataFrame = {
-    val raw = graft.Tables.load(s, dir, "events")
-    val bumpUs = Windows.SessionGapUs + 3600L * 1000000L
-    val bumped = raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", col("ts") + lit(bumpUs * 1000L))
-      case _ => raw.withColumn("ts",
-        col("ts") + expr(s"INTERVAL ${bumpUs / 1000000L} seconds"))
-    }
-    bumped.orderBy(col("ts").desc).limit(1)
+    Tables.shiftEventsTs(Tables.load(s, dir, "events"),
+        Windows.SessionGapUs / 1000000L + 3600L)
+      .orderBy(col("ts").desc).limit(1)
       .withColumn("event_id", lit(-1L))
       .withColumn("user_id", lit(-1L))
   }
@@ -144,7 +129,7 @@ object StreamingQ extends QueryModule {
         mode = "append", extra = Some(sessionSentinel(s, dir))) { st =>
       import s.implicits._
       StreamOps.sessionizeFull(
-        normTs(st).select("event_id", "user_id", "event_type", "value", "ts")
+        Tables.eventsTs(st).select("event_id", "user_id", "event_type", "value", "ts")
           .as[StreamOps.Event],
         Windows.SessionGapUs).toDF()
     }.filter(col("user_id") >= 0).orderBy("user_id", "session_id")
@@ -163,7 +148,7 @@ object StreamingQ extends QueryModule {
   def qStreamIntervalJoin(s: SparkSession, dir: String): DataFrame =
     StreamDrain.drained(s, dir, "stream_interval_join", "events",
         mode = "append") { st =>
-      val e = normTs(st)
+      val e = Tables.eventsTs(st)
       StreamOps.intervalJoin(
           e.filter(col("event_type") === "click"),
           e.filter(col("event_type") === "view"))
@@ -208,7 +193,7 @@ object StreamingQ extends QueryModule {
     StreamDrain.drained(s, dir, "stream_neardup_gate", "documents",
         mode = "append") { st =>
       val standing = Fingerprints.bandTableOf(s,
-        graft.Tables.documents(s, dir)
+        Tables.documents(s, dir)
           .filter(col("doc_id") % 10 =!= 7).select("doc_id", "text"))
       StreamOps.nearDupIngestGate(
           st.filter(col("doc_id") % 10 === 7).select("doc_id", "text"),
@@ -231,7 +216,7 @@ object StreamingQ extends QueryModule {
     val regs = StreamDrain.drained(s, dir, "stream_hll", "events")(st =>
       GroupBys.hllRegisters(st.select("event_type", "user_id")))
     GroupBys.hllFinish(s, regs,
-      graft.Tables.events(s, dir).select("event_type", "user_id"))
+      Tables.events(s, dir).select("event_type", "user_id"))
   }
 
   /** The late-drop fixture, one file per entry: [A = the whole events
@@ -249,7 +234,7 @@ object StreamingQ extends QueryModule {
     * advances — are part of the fixture.
     */
   private[graft] def lateDropStages(s: SparkSession, dir: String): Seq[DataFrame] = {
-    val ev = graft.Tables.events(s, dir)
+    val ev = Tables.events(s, dir)
       .select("event_id", "user_id", "event_type", "value", "ts")
     def hb(seconds: Long, id: Long) =
       ev.orderBy(col("ts").desc, col("event_id").desc).limit(1)
@@ -301,7 +286,7 @@ object StreamingQ extends QueryModule {
     val regs = StreamDrain.drained(s, dir, "stream_quantile", "events")(st =>
       GroupBys.quantileBuckets(st.select("event_type", "value")))
     GroupBys.quantileFinish(regs,
-      graft.Tables.events(s, dir).select("event_type", "value"))
+      Tables.events(s, dir).select("event_type", "value"))
   }
 
   /** Streaming UPSERT (merge) sink via foreachBatch, driver-checked:
@@ -344,7 +329,7 @@ object StreamingQ extends QueryModule {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING); ()
     }
     StreamDrain.drainedBatches(s, dir, "stream_upsert", "events") { (b, id) =>
-      val bb = normTs(b)
+      val bb = Tables.eventsTs(b)
         .select("user_id", "event_type", "value", "ts", "event_id")
       val cur = latest.map(s.read.parquet(_)).getOrElse(bb.filter(lit(false)))
       StreamOps.upsertMerge(cur, bb)
@@ -412,12 +397,14 @@ object StreamingQ extends QueryModule {
       () => qStreamQuantile(s, dir).count(),
       () => qStreamLateDrop(s, dir).count(),
       () => qStreamShardSink(s, dir).count())
-    // Each drain parks its thread in awaitTermination (up to 300 s) —
-    // `blocking` tells the global fork-join pool to grow past its core
-    // count, so on a host with fewer cores than drains they still run
-    // concurrently instead of serializing against the 10-minute Await.
+    // Each drain parks its thread in awaitTermination (up to
+    // StreamDrain.DrainTimeoutMs) — `blocking` tells the global
+    // fork-join pool to grow past its core count, so on a host with
+    // fewer cores than drains they still run side by side, and the
+    // whole prewarm waits on the same bound as one drain.
     Await.result(
-      Future.sequence(drains.map(f => Future(blocking(f())))), 10.minutes)
+      Future.sequence(drains.map(f => Future(blocking(f())))),
+      StreamDrain.DrainTimeoutMs.millis)
     ()
   }
 

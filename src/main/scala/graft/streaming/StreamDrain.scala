@@ -1,8 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
+
+import graft.{Caches, Scratch, Tables}
 
 /** Drive a streaming plan over a corpus table and hand back its standing
   * result table — the bridge that lets STREAMING operators answer the
@@ -10,18 +14,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * twins, so batch↔stream equivalence is a CHECKED claim, not a spec
   * assertion).
   *
-  * Shape: file source over a temp watch dir holding the corpus
-  * file/parts (the landing-dir stand-in; a production stream watches
-  * the real landing dir), the caller's transform, complete-mode drain
-  * through an `availableNow` trigger into a memory sink. The drained
-  * table is memoized per (session, corpus, kind) via [[graft.Caches]] —
-  * in production the monitor runs continuously and consumers read its
-  * sink; here the one drain IS that standing state. Complete mode on
-  * purpose: an append-mode windowed aggregate holds back windows the
-  * final watermark has not passed, so end-of-stream results would be a
-  * strict subset of batch — the wrong thing to hash against a batch
-  * oracle. State stays bounded by the aggregate's key space (value
-  * range / window count), which is the operator author's contract.
+  * Shape: file source over a watch dir in the session's scratch dir
+  * holding the corpus file/parts (the landing-dir stand-in; a
+  * production stream watches the real landing dir), the caller's
+  * transform, an `availableNow` drain into the caller's sink. Every
+  * drain kind runs through the one routine [[drain]]; each drained
+  * result is memoized per (session, corpus, kind) via [[graft.Caches]]
+  * — in production the monitor runs continuously and consumers read its
+  * sink; here the one drain IS that standing state. Complete mode is
+  * the memory drain's default on purpose: an append-mode windowed
+  * aggregate holds back windows the final watermark has not passed, so
+  * end-of-stream results would be a strict subset of batch — the wrong
+  * thing to hash against a batch oracle. State stays bounded by the
+  * aggregate's key space (value range / window count), which is the
+  * operator author's contract.
   */
 object StreamDrain {
 
@@ -29,10 +35,11 @@ object StreamDrain {
     * performance budget (the 100× gate corpus legitimately needs more
     * than the old 300 s cap; a production monitor has no cap at all).
     */
-  private val DrainTimeoutMs: Long =
-    sys.env.get("SPARK_GRAFT_DRAIN_TIMEOUT_MS").map(_.toLong).getOrElse(1200000L)
+  val DrainTimeoutMs: Long = 1200000L
 
-  /** @param kind   cache key + memory-sink name prefix
+  /** MEMORY-sink drain of `dir/table.parquet`.
+    *
+    * @param kind   cache key + memory-sink name prefix
     * @param table  corpus table name (reads `dir/table.parquet`)
     * @param mode   "complete" for aggregates (default — see object doc),
     *               "append" for STATELESS transforms and streaming
@@ -52,32 +59,13 @@ object StreamDrain {
   def drained(s: SparkSession, dir: String, kind: String, table: String,
       mode: String = "complete", extra: => Option[DataFrame] = None)(
       build: DataFrame => DataFrame): DataFrame =
-    graft.Caches.memo(s, dir, kind) {
-      val (watch, schema) = watchDirFor(s, dir, kind, table)
-      extra.foreach { df =>
-        val tmp = graft.Scratch.dirFor(s, s"extra_$kind")
-        df.write.mode("overwrite").parquet(s"$tmp/w")
-        val st = Files.list(Paths.get(s"$tmp/w"))
-        try {
-          val it = st.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            if (p.getFileName.toString.endsWith(".parquet"))
-              Files.copy(p,
-                Paths.get(watch).resolve("zz_extra_" + p.getFileName.toString))
-          }
-        } finally st.close()
-      }
-      val qname = kind + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = build(s.readStream.schema(schema).parquet(watch))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(DrainTimeoutMs),
-        s"availableNow drain of $kind timed out")
-      finally q.stop()
-      s.table(qname)
+    Caches.memo(s, dir, kind) {
+      intoMemory(s, kind, mode) { watch =>
+        val schema = stageTable(s, dir, table, watch)
+        extra.foreach(df => Tables.dataFiles(written(s, s"extra_$kind", df))
+          .foreach(p => Files.copy(p, watch.resolve("zz_extra_" + p.getFileName))))
+        schema
+      }(build)
     }
 
   /** STAGED drain — the arrival-order-controlled variant of [[drained]]:
@@ -93,50 +81,24 @@ object StreamDrain {
   def drainedStaged(s: SparkSession, dir: String, kind: String,
       stages: Seq[DataFrame], perTrigger: Int, mode: String)(
       build: DataFrame => DataFrame): DataFrame =
-    graft.Caches.memo(s, dir, kind) {
-      val watch = graft.Scratch.dirFor(s, s"stream_$kind")
-      val schema = stages.head.schema
-      stages.zipWithIndex.foreach { case (df, i) =>
-        val tmp = graft.Scratch.dirFor(s, s"stage_${kind}_$i")
-        df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/w")
-        // exactly ONE part file per stage (explicit, was implicit in the
-        // coalesce(1) above — ADVICE r12): a multi-part stage would
-        // have thrown FileAlreadyExistsException on the fixed dst name,
-        // an empty stage would silently stage nothing.
-        val parts = {
-          val st = Files.list(Paths.get(s"$tmp/w"))
-          try {
-            val it = st.iterator()
-            var l = List.empty[java.nio.file.Path]
-            while (it.hasNext) {
-              val p = it.next()
-              if (p.getFileName.toString.endsWith(".parquet")) l ::= p
-            }
-            l
-          } finally st.close()
+    Caches.memo(s, dir, kind) {
+      intoMemory(s, kind, mode, Map("maxFilesPerTrigger" -> perTrigger.toString)) { watch =>
+        stages.zipWithIndex.foreach { case (df, i) =>
+          // exactly ONE part file per stage (ADVICE r12): a multi-part
+          // stage would have thrown FileAlreadyExistsException on the
+          // fixed dst name, an empty stage would silently stage nothing.
+          val parts = Tables.dataFiles(written(s, s"stage_${kind}_$i", df.coalesce(1)))
+          require(parts.length == 1,
+            s"staged drain of $kind: stage $i wrote ${parts.length} part files (want exactly 1)")
+          val dst = Files.copy(parts.head, watch.resolve(f"stage_$i%03d.parquet"))
+          // deterministic strictly-increasing mtimes: oldest-first is
+          // the file source's default read order
+          Files.setLastModifiedTime(dst,
+            java.nio.file.attribute.FileTime.fromMillis(
+              1700000000000L + i * 600000L))
         }
-        require(parts.length == 1,
-          s"staged drain of $kind: stage $i wrote ${parts.length} part files (want exactly 1)")
-        val dst = watch.resolve(f"stage_$i%03d.parquet")
-        Files.copy(parts.head, dst)
-        // deterministic strictly-increasing mtimes: oldest-first is
-        // the file source's default read order
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + i * 600000L))
-      }
-      val qname = kind + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = build(s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", perTrigger.toString)
-          .parquet(watch.toString))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(DrainTimeoutMs),
-        s"availableNow staged drain of $kind timed out")
-      finally q.stop()
-      s.table(qname)
+        stages.head.schema
+      }(build)
     }
 
   /** FILE-sink drain: run the caller's (stateless, append-mode)
@@ -151,19 +113,13 @@ object StreamDrain {
     */
   def drainedFiles(s: SparkSession, dir: String, kind: String, table: String)(
       build: DataFrame => DataFrame): DataFrame =
-    graft.Caches.memoSide(s, dir, kind) {
-      val (watch, schema) = watchDirFor(s, dir, kind, table)
-      val out = graft.Scratch.dirFor(s, s"sink_$kind")
-      val q = build(s.readStream.schema(schema).parquet(watch))
+    Caches.memoSide(s, dir, kind) {
+      val out = Scratch.dirFor(s, s"sink_$kind")
+      drain(s, kind, stageTable(s, dir, table, _))(build(_)
         .writeStream.format("parquet")
         .option("path", s"$out/data")
         .option("checkpointLocation", s"$out/checkpoint")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(DrainTimeoutMs),
-        s"availableNow file drain of $kind timed out")
-      finally q.stop()
+        .outputMode("append"))
       s.read.parquet(s"$out/data")
     }
 
@@ -177,41 +133,57 @@ object StreamDrain {
   def drainedBatches(s: SparkSession, dir: String, kind: String,
       table: String)(sink: (DataFrame, Long) => Unit)(
       result: => DataFrame): DataFrame =
-    graft.Caches.memoSide(s, dir, kind) {
-      val (watch, schema) = watchDirFor(s, dir, kind, table)
-      val q = s.readStream.schema(schema).parquet(watch)
+    Caches.memoSide(s, dir, kind) {
+      drain(s, kind, stageTable(s, dir, table, _))(_
         .writeStream.foreachBatch(sink)
-        .option("checkpointLocation",
-          graft.Scratch.dirFor(s, s"chk_$kind").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(DrainTimeoutMs),
-        s"availableNow foreachBatch drain of $kind timed out")
-      finally q.stop()
+        .option("checkpointLocation", Scratch.dirFor(s, s"chk_$kind").toString))
       result
     }
 
-  /** Stage `dir/table.parquet`'s files into a fresh watch dir (the
-    * landing-dir stand-in a file-source stream monitors) and return it
-    * with the source schema.
+  /** The memory-sink drains: run [[drain]] into a uniquely named memory
+    * sink and hand back its table.
     */
-  private def watchDirFor(s: SparkSession, dir: String, kind: String,
-      table: String): (String, org.apache.spark.sql.types.StructType) = {
-    val srcPath = s"$dir/$table.parquet"
-    val schema = graft.Tables.load(s, dir, table).schema
-    val watch = graft.Scratch.dirFor(s, s"stream_$kind")
-    val src = Paths.get(srcPath)
-    if (Files.isDirectory(src)) {
-      val st = Files.list(src)
-      try {
-        val it = st.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.endsWith(".parquet"))
-            Files.copy(p, watch.resolve(p.getFileName.toString))
-        }
-      } finally st.close()
-    } else Files.copy(src, watch.resolve(s"$table.parquet"))
-    (watch.toString, schema)
+  private def intoMemory(s: SparkSession, kind: String, mode: String,
+      options: Map[String, String] = Map.empty)(stage: Path => StructType)(
+      build: DataFrame => DataFrame): DataFrame = {
+    val qname = kind + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    drain(s, kind, stage, options)(build(_)
+      .writeStream.format("memory").queryName(qname).outputMode(mode))
+    s.table(qname)
+  }
+
+  /** The one drain: `stage` fills a fresh watch dir in `s`'s scratch dir
+    * and returns the source schema; a file-source stream over it (with
+    * the reader `options`) runs into `sink` under an availableNow
+    * trigger, and must finish within [[DrainTimeoutMs]].
+    */
+  private def drain(s: SparkSession, kind: String, stage: Path => StructType,
+      options: Map[String, String] = Map.empty)(
+      sink: DataFrame => DataStreamWriter[Row]): Unit = {
+    val watch = Scratch.dirFor(s, s"stream_$kind")
+    val schema = stage(watch)
+    val q = sink(s.readStream.schema(schema).options(options).parquet(watch.toString))
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try require(q.awaitTermination(DrainTimeoutMs),
+      s"availableNow drain of $kind timed out")
+    finally q.stop()
+  }
+
+  /** Stage `dir/table.parquet`'s data files into `watch` and return the
+    * source schema.
+    */
+  private def stageTable(s: SparkSession, dir: String, table: String,
+      watch: Path): StructType = {
+    Tables.dataFiles(java.nio.file.Paths.get(s"$dir/$table.parquet"))
+      .foreach(p => Files.copy(p, watch.resolve(p.getFileName)))
+    Tables.load(s, dir, table).schema
+  }
+
+  /** `df` written as parquet into a fresh scratch dir named `kind`. */
+  private def written(s: SparkSession, kind: String, df: DataFrame): Path = {
+    val out = Scratch.dirFor(s, kind).resolve("w")
+    df.write.mode("overwrite").parquet(out.toString)
+    out
   }
 }

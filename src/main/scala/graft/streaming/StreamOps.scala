@@ -209,9 +209,6 @@ object StreamOps {
 
   case class Event(event_id: Long, user_id: Long, event_type: String,
       value: Double, ts: Timestamp)
-  case class SessionState(start: Long, lastTs: Long, n: Long, sum: Double)
-  case class Session(user_id: Long, start: Timestamp, end: Timestamp,
-      n: Long, sum_value: Double)
 
   /** Epoch MICROS of a Timestamp (getTime alone drops the sub-ms part
     * the events table carries).
@@ -254,7 +251,7 @@ object StreamOps {
     * claim with NO dependence on watermark/timeout timing.
     *
     * The production flush for idle users is the timeout path
-    * [[sessionize]] carries; this operator deliberately has NoTimeout
+    * [[sessionizeFull]] carries; this operator deliberately has NoTimeout
     * so emission depends only on the event sequence. State per user is
     * one open session (five longs) — bounded by active users. Events
     * are sorted per batch; cross-batch the per-user landing order is
@@ -318,10 +315,13 @@ object StreamOps {
     *
     * The watermark delay is 0 here (the drained file source replays a
     * landing dir whose per-user order is the contract; production sets
-    * a real out-of-orderness budget — the fold itself absorbs late
-    * arrivals that do get through, see [[foldSession]]). On a BOUNDED
-    * drain the watermark stops at the stream's max event time, so the
-    * ledger equals the full batch sessionization exactly when a
+    * a real out-of-orderness budget). The fold is [[foldClosedBatch]]:
+    * a late arrival that does get through — event time before the open
+    * session's last event — joins that open session, adding to its
+    * count and sum; the session's last event time stays put and its
+    * start is NOT moved back to the late event. On a BOUNDED drain the
+    * watermark stops at the stream's max event time, so the ledger
+    * equals the full batch sessionization exactly when a
     * max-event-time heartbeat ≥ every `lastTs + gap` rides at the end
     * of the stream (the sentinel row the driver query stages); the
     * heartbeat user's own session can never flush (the watermark cannot
@@ -369,64 +369,6 @@ object StreamOps {
                 state.getCurrentWatermarkMs() + 1L))
             }
             out
-          }
-      }
-  }
-
-  /** The per-group session fold — pure and directly unit-testable:
-    * given the open-session state and a batch of events, returns the
-    * sessions closed by this batch plus the new open state. Late
-    * arrivals (before the open session's lastTs) fold INTO the open
-    * session, widening its start if needed, WITHOUT moving lastTs
-    * backwards — otherwise end < start and the next on-time event
-    * misfires the gap check.
-    */
-  def foldSession(userId: Long, prev: Option[SessionState], batch: Seq[Event],
-      gapMs: Long): (List[Session], Option[SessionState]) = {
-    val sorted = batch.sortBy(_.ts.getTime)
-    var closed = List.empty[Session]
-    var cur = prev
-    sorted.foreach { e =>
-      val t = e.ts.getTime
-      cur match {
-        case Some(s) if t < s.lastTs =>
-          cur = Some(s.copy(start = math.min(s.start, t),
-            n = s.n + 1, sum = s.sum + e.value))
-        case Some(s) if t - s.lastTs < gapMs =>
-          cur = Some(s.copy(lastTs = t, n = s.n + 1, sum = s.sum + e.value))
-        case Some(s) =>
-          closed ::= Session(userId, new Timestamp(s.start), new Timestamp(s.lastTs), s.n, s.sum)
-          cur = Some(SessionState(t, t, 1, e.value))
-        case None =>
-          cur = Some(SessionState(t, t, 1, e.value))
-      }
-    }
-    (closed.reverse, cur)
-  }
-
-  /** Custom stateful sessionization via `flatMapGroupsWithState`:
-    * a session closes after `gapMs` of user inactivity (processing-time
-    * timeout drives emission) — the `KeyValueGroupedDataset` custom-state
-    * surface the brief calls for.
-    */
-  def sessionize(events: Dataset[Event], gapMs: Long = 5 * 60 * 1000): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(Session(userId, new Timestamp(s.start), new Timestamp(s.lastTs), s.n, s.sum))
-          } else {
-            val (closed, cur) = foldSession(userId, state.getOption, rows.toSeq, gapMs)
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutDuration(gapMs)
-            }
-            closed.iterator
           }
       }
   }

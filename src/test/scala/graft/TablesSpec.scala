@@ -21,9 +21,12 @@ class TablesSpec extends SparkSpec {
         s"$dir/$name")
   }
 
-  test("footer schema equals the inferred schema for a Spark-written 3-file directory") {
+  /** A Spark-written 3-file directory `mixed.parquet` of 30 rows over
+    * every column type the testdata uses, with the `_SUCCESS` marker
+    * and `.crc` checksums the write leaves.
+    */
+  private lazy val mixedDir: String = {
     val dir = tmpDir("tables")
-    val path = s"$dir/mixed.parquet"
     spark.range(30).selectExpr(
       "cast(id as int) as i", "id as l", "cast(id as short) as sh",
       "cast(id as byte) as b", "cast(id as decimal(38,0)) as d38",
@@ -36,13 +39,27 @@ class TablesSpec extends SparkSpec {
       "named_struct('a', id, 'b', cast(id as string)) as st",
       "cast(id as string) as s", "cast(cast(id as string) as binary) as bin",
       "id % 2 = 0 as flag")
-      .repartition(3).write.parquet(path)
+      .repartition(3).write.parquet(s"$dir/mixed.parquet")
+    dir
+  }
+
+  test("footer schema equals the inferred schema for a Spark-written 3-file directory") {
+    val path = s"$mixedDir/mixed.parquet"
     assert(Files.list(Paths.get(path)).toArray
       .count(_.toString.endsWith(".parquet")) == 3)
-    val df = Tables.load(spark, dir, "mixed")
+    val df = Tables.load(spark, mixedDir, "mixed")
     assert(df.schema.length == 17)
-    assert(df.schema == inferred(dir, "mixed"))
+    assert(df.schema == inferred(mixedDir, "mixed"))
     assert(df.count() == 30)
+  }
+
+  test("dataFiles of a Spark-written 3-file directory are exactly its part files") {
+    val path = Paths.get(mixedDir, "mixed.parquet")
+    val all = Files.list(path).toArray.map(_.toString.split('/').last).toSeq
+    assert(all.contains("_SUCCESS") && all.exists(_.endsWith(".crc")), all)
+    val names = Tables.dataFiles(path).map(_.getFileName.toString)
+    assert(names == all.filter(_.startsWith("part-")).sorted, names)
+    assert(names.length == 3 && names.forall(_.endsWith(".parquet")), names)
   }
 
   test("loading the ten tables and constructing q1_agg runs no Spark job") {

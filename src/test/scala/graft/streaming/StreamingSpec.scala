@@ -34,25 +34,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("sessionize closes a session when the inactivity gap is exceeded") {
-    // Batch-mode flatMapGroupsWithState: sessions closed by a LATER event
-    // are emitted; the trailing open session stays in (discarded) state.
-    val events = Seq(
-      StreamOps.Event(1, 7, "click", 1.0, ts("2024-01-01 10:00:00")),
-      StreamOps.Event(2, 7, "click", 2.0, ts("2024-01-01 10:02:00")),
-      StreamOps.Event(3, 7, "click", 4.0, ts("2024-01-01 10:30:00")), // new session
-      StreamOps.Event(4, 8, "view", 9.0, ts("2024-01-01 09:00:00")),
-      StreamOps.Event(5, 8, "view", 1.0, ts("2024-01-01 11:00:00")) // new session
-    ).toDS()
-    val closed = StreamOps.sessionize(events).collect().sortBy(_.user_id)
-    assert(closed.length == 2)
-    val s7 = closed(0)
-    assert(s7.user_id == 7 && s7.n == 2 && s7.sum_value == 3.0
-      && s7.start == ts("2024-01-01 10:00:00") && s7.end == ts("2024-01-01 10:02:00"))
-    val s8 = closed(1)
-    assert(s8.user_id == 8 && s8.n == 1 && s8.sum_value == 9.0)
-  }
-
   test("stream-static join enriches streaming events with a dimension") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
@@ -287,24 +268,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("session fold handles cross-batch late events without regressing lastTs") {
-    // batch 1 opens a session at 10:00
-    val (none, st1) = StreamOps.foldSession(9L, None,
-      Seq(StreamOps.Event(1, 9, "click", 1.0, ts("2024-01-01 10:00:00"))), 300000L)
-    assert(none.isEmpty && st1.isDefined)
-    // batch 2: a LATE event (before the open session's lastTs) plus an
-    // on-time event far enough ahead to close the session
-    val (closed, st2) = StreamOps.foldSession(9L, st1, Seq(
-      StreamOps.Event(2, 9, "click", 2.0, ts("2024-01-01 09:59:00")),
-      StreamOps.Event(3, 9, "click", 4.0, ts("2024-01-01 10:30:00"))), 300000L)
-    assert(closed.length == 1)
-    val s = closed.head
-    assert(s.n == 2 && s.sum_value == 3.0)
-    assert(s.start == ts("2024-01-01 09:59:00") && s.end == ts("2024-01-01 10:00:00"))
-    assert(!s.end.before(s.start))
-    assert(st2.exists(_.n == 1)) // 10:30 session still open
-  }
-
   test("streaming tumbling agg replays the batch result on the events corpus") {
     // Stream/batch parity on REAL data: the whole sf0.001 events table
     // through MemoryStream must produce the same windows, counts, and
@@ -457,6 +420,21 @@ class StreamingSpec extends SparkSpec {
     val wN = diff.head._2.apply(2).asInstanceOf[Long]
     assert(cN == wN + 1L,
       "the admitted late row must add exactly one event to its window")
+  }
+
+  test("staged drain fails naming the stage that wrote more than one part file") {
+    // one row per file: the second stage's two rows land as two part
+    // files even after its coalesce(1)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try {
+      val stages = Seq(s.range(1).toDF("x"), s.range(2).toDF("x"))
+      val e = intercept[IllegalArgumentException](
+        StreamDrain.drainedStaged(s, "spec_staged", "spec_two_parts", stages,
+          perTrigger = 1, mode = "append")(identity))
+      assert(e.getMessage.contains(
+        "staged drain of spec_two_parts: stage 1 wrote 2 part files"), e.getMessage)
+    } finally graft.Caches.clear(s)
   }
 
   test("upsert merge is batching-independent and equals the one-window latest-row") {
