@@ -2,7 +2,10 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.SeqMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times the SparkEntry query suite at the given scale
   * factor and prints one JSON line. Headline numbers feed BENCH_r{N}.json
@@ -60,6 +63,8 @@ object Bench {
     */
   private val MaxLine = 1750
   private val DetailFile = "bench_detail.json"
+  /** Workers of the pooled leg. */
+  private val PoolSize = 8
 
   /** Queries at least this slow in their warm sequential rep are timed
     * sequentially (clean numbers), subject to [[OverflowCap]].
@@ -133,10 +138,12 @@ object Bench {
     } catch { case _: Throwable => } // best effort — never fail the bench
   }
 
+  /** A registered query: the suite's unit of timing. */
+  private type Query = (SparkSession, String) => DataFrame
+
   def main(args: Array[String]): Unit = {
     installCodegenFailCounter()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val poolSize = sys.env.getOrElse("SPARK_GRAFT_POOL", "8").toInt
     val cpus = Session.cpus(Session.Profile.Bench, sys.env)
     val spark = Session.start(Session.Profile.Bench)
 
@@ -187,22 +194,27 @@ object Bench {
       .filter(_._2 >= 0.005)
     val prepSec = (System.nanoTime() - prepT0) / 1e9
 
-    // Optional comma-separated query filter for targeted profiling, and
-    // repeat count to average out JIT/GC noise.
+    // Optional comma-separated query filter for targeted profiling.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
 
-    // Warmup rep(s), sequential: pays codegen/JIT per query. A query
+    // Every timed or untimed execution of a query: its seconds, or None
+    // if it threw. Jobs carry the query's name (guide §1.5) — the job
+    // description is thread-local, so pooled workers tag their own
+    // queries correctly in the UI / event log.
+    def run(name: String, fn: Query): Option[Double] = {
+      spark.sparkContext.setJobDescription(name)
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case _: Throwable => None }
+      finally spark.sparkContext.setJobDescription(null)
+    }
+
+    // One warmup rep, sequential: pays codegen/JIT per query. A query
     // that throws in warmup is pushed to the sequential leg so its
     // failure is re-observed (and recorded) under clean timing.
-    val cold = selected.map { case (name, fn) =>
-      val ok = (1 until reps).forall { _ =>
-        try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      }
-      (name, fn, ok)
-    }
+    val cold = selected.map { case (name, fn) => (name, fn, run(name, fn).isDefined) }
     // Warm SEQUENTIAL pass (protocol 2): one contention-free, warm,
     // all-sequential per-query series — the pre-round-7 timing
     // discipline, re-measured every round as the cross-round continuity
@@ -210,10 +222,7 @@ object Bench {
     // contention by design and must not be compared against it). Also
     // the heavy-leg overflow classifier.
     val warm0 = cold.map { case (name, fn, okCold) =>
-      val t0 = System.nanoTime()
-      val ok = okCold && (try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false })
-      (name, fn, if (ok) (System.nanoTime() - t0) / 1e9 else Double.MaxValue)
+      (name, fn, if (okCold) run(name, fn) else None)
     }
     // Load-robust anchor (round 11): a transient host-load spike lands
     // in whichever queries it overlapped, inflating seq_sum and the
@@ -222,31 +231,27 @@ object Bench {
     // bounds one-sided steal (a genuine plan regression is slow BOTH
     // times; a spike rarely hits the same query twice). BASELINE.md
     // documents the rule.
-    val reMeasure = warm0.filter(_._3 != Double.MaxValue)
-      .sortBy(-_._3).take(10).map(_._1).toSet
-    val warm = warm0.map { case (name, fn, t) =>
-      if (t != Double.MaxValue && reMeasure(name)) {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val t2 = if (ok) (System.nanoTime() - t0) / 1e9 else Double.MaxValue
-        (name, fn, math.min(t, t2))
-      } else (name, fn, t)
+    val reMeasure = warm0.collect { case (name, _, Some(t)) => (name, t) }
+      .sortBy(-_._2).take(10).map(_._1).toSet
+    val warm = warm0.map {
+      case (name, fn, Some(t)) if reMeasure(name) =>
+        (name, fn, Some(run(name, fn).fold(t)(math.min(t, _))))
+      case w => w
     }
-    val seqSum = warm.collect { case (_, _, t) if t != Double.MaxValue => t }.sum
+    val seqSum = warm.flatMap(_._3).sum
     // The pre-re-measure sum — the single-shot discipline every round
     // before 11 recorded. Emitting both lets a cross-round reader
     // separate the min-of-two protocol's one-sided deflation from real
     // plan deltas.
-    val seqSumRaw = warm0.collect { case (_, _, t) if t != Double.MaxValue => t }.sum
+    val seqSumRaw = warm0.flatMap(_._3).sum
     // Trivial-query sentinels: q_head (limit-100 scan) and q_group_sum
     // (5-group agg) are sub-0.1 s warm on a quiet host at every SF; a
     // warm rep over ~1 s can only be host steal.
     val sentinelSlow = warm.exists { case (n, _, t) =>
-      (n == "q_head" || n == "q_group_sum") && t != Double.MaxValue && t > 1.0 }
-    val overflow = warm.sortBy(-_._3)
-      .filter(w => !PinnedHeavy(w._1) &&
-        (w._3 >= HeavyFloorSec || w._3 == Double.MaxValue))
+      (n == "q_head" || n == "q_group_sum") && t.exists(_ > 1.0) }
+    // Failed queries first, then slowest first.
+    val overflow = warm.sortBy(_._3.fold(Double.NegativeInfinity)(-_))
+      .filter(w => !PinnedHeavy(w._1) && w._3.forall(_ >= HeavyFloorSec))
       .take(OverflowCap).map(_._1).toSet
     val heavyNames = PinnedHeavy.filter(n => warm.exists(_._1 == n)) ++ overflow
 
@@ -254,16 +259,8 @@ object Bench {
     // time — a fast crash must never read as a speedup) and listed in
     // the JSON's "failed" array.
     val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def timedRun(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // Label the jobs (guide §1.5) — thread-local, so pooled workers
-      // tag their own queries correctly in the UI / event log.
-      spark.sparkContext.setJobDescription(name)
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => failed.add(name); false }
-      spark.sparkContext.setJobDescription(null)
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
+    def timedRun(name: String, fn: Query): Double =
+      run(name, fn).getOrElse { failed.add(name); -1.0 }
 
     val timedT0 = System.nanoTime()
     // Leg 1: the heavy queries, one at a time, whole executor each.
@@ -274,11 +271,10 @@ object Bench {
     // Leg 2: everything else through a fixed worker pool. Results keep
     // per-query elapsed (contention-inclusive) for the detail file.
     val lightT0 = System.nanoTime()
-    val lightQueue = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
+    val lightQueue = new java.util.concurrent.ConcurrentLinkedQueue[(String, Query)]()
     warm.foreach { case (name, fn, _) => if (!heavyNames(name)) lightQueue.add((name, fn)) }
     val lightResults = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-    val workers = (0 until poolSize).map { i =>
+    val workers = (0 until PoolSize).map { i =>
       val t = new Thread(() => {
         // own pool per worker — see the prep threads' comment
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"bench-$i")
@@ -292,8 +288,8 @@ object Bench {
     }
     workers.foreach(_.join())
     val lightWall = (System.nanoTime() - lightT0) / 1e9
-    val results = (heavyResults ++
-      lightResults.toArray(Array.empty[(String, Double)]).toSeq).sortBy(_._1)
+    val pooled = lightResults.asScala.toSeq
+    val results = (heavyResults ++ pooled).sortBy(_._1)
 
     // Headline: wall-clock of the timed phase (what the suite costs to
     // run). qSum: the per-query sum — the pre-round-7 discipline, kept
@@ -317,88 +313,81 @@ object Bench {
     // sentinels mean this sample's seq_sum is cross-round comparable
     // as-is, no exegesis needed.
     val anchor = !sentinelSlow && load0 < 0.5
-    val loadJson = s""","load":[${f2(load0)},${f2(load1)}],"cpus":$cpus""" +
-      (if (loadSkewed) ""","load_skewed":true""" else "") +
-      (if (anchor) ""","anchor":true""" else "")
 
     // Full-precision detail for offline reading (best effort — the
     // printed line is the artifact of record).
     try {
-      val detail = results.map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}")
-      val prepJson = prepDetail.map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}")
-      val heavyJson = heavyResults.map(_._1).sorted
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-      val seqJson = warm.collect { case (k, _, t) if t != Double.MaxValue =>
-        s""""$k":$t""" }.mkString("{", ",", "}")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(DetailFile),
-        s"""{"protocol":2,"total":$total,"q_sum":$qSum,"seq_sum":$seqSum,"seq_sum_raw":$seqSumRaw,"heavy_wall":$heavyWall,"light_wall":$lightWall,"pool":$poolSize,"heavy":$heavyJson,"prep":$prepSec,"prep_by_module":$prepJson,"load":[$load0,$load1],"load_skewed":$loadSkewed,"anchor":$anchor,"codegen_fallbacks":$codegenFallbacks,"sf":"$sfDir","queries":$detail,"seq":$seqJson}\n"""
-          .getBytes("UTF-8"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(DetailFile),
+        jsonMapper.writeValueAsString(SeqMap(
+          "protocol" -> 2, "total" -> total, "q_sum" -> qSum,
+          "seq_sum" -> seqSum, "seq_sum_raw" -> seqSumRaw,
+          "heavy_wall" -> heavyWall, "light_wall" -> lightWall,
+          "pool" -> PoolSize, "heavy" -> heavyResults.map(_._1).sorted,
+          "prep" -> prepSec, "prep_by_module" -> SeqMap.from(prepDetail),
+          "load" -> Seq(load0, load1), "load_skewed" -> loadSkewed,
+          "anchor" -> anchor, "codegen_fallbacks" -> codegenFallbacks,
+          "sf" -> sfDir, "queries" -> SeqMap.from(results),
+          "seq" -> SeqMap.from(warm.collect { case (k, _, Some(t)) => k -> t }))) + "\n")
     } catch { case _: Throwable => }
 
-    // Compact line: short keys, 2-decimal seconds, slowest first. ONLY
-    // the sequentially-timed (heavy) entries print individually — their
-    // numbers are clean and comparable round over round; pooled entries
-    // are contention-inflated by design (a 0.4 s query can read 1.6 s
-    // inside the pool), so surfacing them per-name would read as phantom
-    // regressions. The pool folds into _other/_other_n (per-query pool
-    // numbers live in the detail file), and the self-sizing fallback
-    // still folds heavy tail entries if the line would overflow.
-    val sfNum = "sf([0-9]+(?:\\.[0-9]+)?)/*$".r.findFirstMatchIn(sfDir).map(_.group(1))
-    val sfJson = sfNum.getOrElse {
-      "\"" + sfDir.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    }
-    val failedSeq = {
-      val it = failed.iterator(); var l = List.empty[String]
-      while (it.hasNext) l ::= it.next(); l
-    }
-    val failedJson =
-      if (failedSeq.isEmpty) ""
-      else failedSeq.sorted.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
-    val pooledSum = lightResults.toArray(Array.empty[(String, Double)])
-      .collect { case (_, v) if v >= 0 => v }.sum
-    val pooledN = lightResults.size()
-    val entries = heavyResults
-      .map { case (k, v) => (k.stripPrefix("q_"), v) }
-      .sortBy { case (_, v) => -v }
-    def line(shown: Seq[(String, Double)], restN: Int, restSum: Double): String = {
-      val qs = shown.map { case (k, v) => "\"" + k + "\":" + f2(v) } ++
-        (if (restN + pooledN > 0)
-          Seq("\"_other\":" + f2(restSum + pooledSum),
-            "\"_other_n\":" + (restN + pooledN))
-         else Nil)
-      // protocol:2 — "value" is the two-leg wall clock (sequential heavy
-      // leg + pooled rest); cross-round per-query deltas must key off
-      // seq_sum / the detail file's warm all-sequential "seq" map, the
-      // pre-round-7 timing discipline re-measured every round.
-      s"""{"metric":"total","value":${f2(total)},"unit":"sec","protocol":2,""" +
-        s""""q_sum":${f2(qSum)},"seq_sum":${f2(seqSum)},"seq_sum_raw":${f2(seqSumRaw)},""" +
-        s""""seq_wall":${f2(heavyWall)},"pool_wall":${f2(lightWall)},"pool":$poolSize,""" +
-        s""""prep":${f2(prepSec)},"codegen_fallbacks":$codegenFallbacks,""" +
-        s""""queries":${qs.mkString("{", ",", "}")}$failedJson$loadJson,"sf":$sfJson}"""
-    }
-    val full = line(entries, 0, 0.0)
-    val out =
-      if (full.length <= MaxLine) full
-      else {
-        // keep the largest prefix of slowest-first entries that fits
-        var k = entries.length
-        var candidate = full
-        while (k > 0 && candidate.length > MaxLine) {
-          k -= 1
-          val (shown, rest) = entries.splitAt(k)
-          candidate = line(shown, rest.length, rest.map(_._2.max(0.0)).sum)
-        }
-        candidate
-      }
-    println(out)
+    println(line(total = total, qSum = qSum, seqSum = seqSum,
+      seqSumRaw = seqSumRaw, seqWall = heavyWall, poolWall = lightWall,
+      prep = prepSec, codegenFallbacks = codegenFallbacks,
+      heavy = heavyResults, pooled = pooled.map(_._2),
+      failed = failed.asScala.toSeq, load = (load0, load1),
+      cpus = cpus, loadSkewed = loadSkewed, anchor = anchor, sfDir = sfDir))
     spark.stop()
+  }
+
+  /** The printed line: short keys, 2-decimal seconds, slowest first.
+    * ONLY the sequentially-timed (`heavy`) entries print individually —
+    * their numbers are clean and comparable round over round; `pooled`
+    * entries are contention-inflated by design (a 0.4 s query can read
+    * 1.6 s inside the pool), so surfacing them per-name would read as
+    * phantom regressions. The pool folds into `_other`/`_other_n`
+    * (per-query pool numbers live in the detail file), and if the line
+    * would overflow [[MaxLine]], the smallest heavy entries fold there
+    * too. A failed query (-1) prints as -1.00, adds nothing to
+    * `_other` and is listed, sorted, in `failed`. An `sfDir` ending in `sfN` prints N as a number, any
+    * other as a string.
+    *
+    * protocol:2 — "value" is the two-leg wall clock (sequential heavy
+    * leg + pooled rest); cross-round per-query deltas must key off
+    * seq_sum / the detail file's warm all-sequential "seq" map, the
+    * pre-round-7 timing discipline re-measured every round.
+    */
+  private[graft] def line(total: Double, qSum: Double, seqSum: Double,
+      seqSumRaw: Double, seqWall: Double, poolWall: Double, prep: Double,
+      codegenFallbacks: Int, heavy: Seq[(String, Double)], pooled: Seq[Double],
+      failed: Seq[String], load: (Double, Double), cpus: Int,
+      loadSkewed: Boolean, anchor: Boolean, sfDir: String): String = {
+    def secs(v: Double) = new java.math.BigDecimal(f2(v))
+    val sf = "sf([0-9]+(?:\\.[0-9]+)?)/*$".r.findFirstMatchIn(sfDir)
+      .map(m => new java.math.BigDecimal(m.group(1))).getOrElse(sfDir)
+    val pooledSum = pooled.filter(_ >= 0).sum
+    val entries = heavy.map { case (k, v) => (k.stripPrefix("q_"), v) }
+      .sortBy { case (_, v) => -v }
+    def render(shownN: Int): String = {
+      val (shown, rest) = entries.splitAt(shownN)
+      val restN = rest.length + pooled.length
+      val queries = SeqMap.from(shown.map { case (k, v) => k -> secs(v) }) ++
+        (if (restN > 0) Seq("_other" -> secs(rest.map(_._2.max(0.0)).sum + pooledSum),
+            "_other_n" -> restN)
+         else Nil)
+      jsonMapper.writeValueAsString(SeqMap[String, Any](
+        "metric" -> "total", "value" -> secs(total), "unit" -> "sec", "protocol" -> 2,
+        "q_sum" -> secs(qSum), "seq_sum" -> secs(seqSum), "seq_sum_raw" -> secs(seqSumRaw),
+        "seq_wall" -> secs(seqWall), "pool_wall" -> secs(poolWall), "pool" -> PoolSize,
+        "prep" -> secs(prep), "codegen_fallbacks" -> codegenFallbacks,
+        "queries" -> queries) ++
+        (if (failed.isEmpty) Nil else Seq("failed" -> failed.sorted)) ++
+        Seq("load" -> Seq(secs(load._1), secs(load._2)), "cpus" -> cpus) ++
+        (if (loadSkewed) Seq("load_skewed" -> true) else Nil) ++
+        (if (anchor) Seq("anchor" -> true) else Nil) ++
+        Seq("sf" -> sf))
+    }
+    // the largest prefix of slowest-first entries that fits
+    (entries.length to 0 by -1).iterator.map(render)
+      .find(_.length <= MaxLine).getOrElse(render(0))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.SeqMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -246,12 +248,32 @@ object ScaleStress {
     (r.getLong(0), r.getDecimal(1))
   }
 
-  private var failures = 0
   private val results =
     scala.collection.mutable.LinkedHashMap[String, (Boolean, Double)]()
   // scale100 per-leg wall costs: query -> (secs at 10×, secs at 100×)
   private val legTimes =
     scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
+
+  /** Seconds at the CHECK lines' precision, printed as a JSON number. */
+  private def tenths(v: Double) =
+    new java.math.BigDecimal(String.format(java.util.Locale.ROOT, "%.1f", v))
+
+  /** The machine-readable gate record (SCALE_rNN.json): the run's totals,
+    * the scale100 per-leg costs when that phase ran, and one object per
+    * check with pass/fail + seconds — the same facts as the CHECK lines.
+    */
+  private[graft] def record(dir: String, wall: Double,
+      results: Seq[(String, (Boolean, Double))],
+      legs: Seq[(String, (Double, Double))]): String =
+    jsonMapper.writerWithDefaultPrettyPrinter().writeValueAsString(SeqMap[String, Any](
+      "dir" -> dir, "n_checks" -> results.size,
+      "failures" -> results.count(!_._2._1), "wall_sec" -> tenths(wall)) ++
+      (if (legs.isEmpty) Nil
+       else Seq("scale100" -> legs.map { case (q, (t10, t100)) =>
+         SeqMap("query" -> q, "t10_sec" -> tenths(t10), "t100_sec" -> tenths(t100),
+           "ratio" -> tenths(t100 / t10)) })) ++
+      Seq("checks" -> results.map { case (k, (ok, v)) =>
+        SeqMap("name" -> k, "pass" -> ok, "secs" -> tenths(v)) })) + "\n"
 
   private def check(name: String)(body: => Boolean): Unit = {
     val t0 = System.nanoTime()
@@ -260,7 +282,6 @@ object ScaleStress {
       catch { case e: Throwable => (false, s" ${e.getClass.getSimpleName}: ${e.getMessage}") }
     val secs = (System.nanoTime() - t0) / 1e9
     results(name) = (ok, secs)
-    if (!ok) failures += 1
     println(f"CHECK $name%-28s ${if (ok) "PASS" else "FAIL"} $secs%8.1f s$err")
   }
 
@@ -771,32 +792,14 @@ object ScaleStress {
     }
 
     val wall = (System.nanoTime() - t0) / 1e9
-    val per = results.map { case (k, (_, v)) => f""""$k":$v%.1f""" }.mkString(",")
-    println(f"""{"scale_stress":"$dir","checks":${results.size},"failures":$failures,"wall_sec":$wall%.1f,"timings":{$per}}""")
-    // machine-readable gate record (SCALE_rNN.json): one object per
-    // check with pass/fail + seconds, same facts as the CHECK lines
+    val failures = results.count(!_._2._1)
+    println(jsonMapper.writeValueAsString(SeqMap(
+      "scale_stress" -> dir, "checks" -> results.size, "failures" -> failures,
+      "wall_sec" -> tenths(wall),
+      "timings" -> SeqMap.from(results.map { case (k, (_, v)) => k -> tenths(v) }))))
     sys.env.get("SPARK_GRAFT_SCALE_JSON").foreach { path =>
-      val checksJson = results.map { case (k, (ok, v)) =>
-        f"""    {"name":"$k","pass":$ok,"secs":$v%.1f}"""
-      }.mkString(",\n")
-      val legsJson =
-        if (legTimes.isEmpty) ""
-        else legTimes.map { case (q, (t10, t100)) =>
-          f"""    {"query":"$q","t10_sec":$t10%.1f,"t100_sec":$t100%.1f,"ratio":${t100 / t10}%.1f}"""
-        }.mkString("  \"scale100\": [\n", ",\n", "\n  ],\n")
-      val json =
-        f"""{
-           |  "dir": "$dir",
-           |  "n_checks": ${results.size},
-           |  "failures": $failures,
-           |  "wall_sec": $wall%.1f,
-           |$legsJson  "checks": [
-           |$checksJson
-           |  ]
-           |}
-           |""".stripMargin
-      java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+        record(dir, wall, results.toSeq, legTimes.toSeq))
       println(s"SCALE JSON -> $path")
     }
     spark.stop()

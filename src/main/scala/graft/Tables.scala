@@ -61,15 +61,28 @@ object Tables {
     * takes the session conf, so `prep`'s `nanosAsLong` applies.
     */
   private def footerSchema(spark: SparkSession, path: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val file = dataFiles(Paths.get(path)).headOption
-      .map(f => new org.apache.hadoop.fs.Path(f.toString))
-      .getOrElse(throw new IllegalArgumentException(
+    val file = dataFiles(Paths.get(path)).headOption.getOrElse(
+      throw new IllegalArgumentException(
         s"Unable to read a parquet schema from $path: no data file"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val footer = try reader.getFooter finally reader.close()
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+    ParquetFileFormat.readSchemaFromFooter(footer(spark, file),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Row count of `sfDir/name.parquet`: the sum of the row-group counts
+    * in the footers of its [[dataFiles]]. Read on the driver like
+    * [[load]]'s schema, so a query that needs the corpus size as a
+    * scalar gets it without a `count()` job.
+    */
+  def rows(spark: SparkSession, sfDir: String, name: String): Long =
+    dataFiles(Paths.get(s"$sfDir/$name.parquet")).map(footer(spark, _)
+      .getParquetMetadata.getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** The parquet footer of one data file, read on the driver. */
+  private def footer(spark: SparkSession, file: Path): Footer = {
+    val hadoopPath = new org.apache.hadoop.fs.Path(file.toString)
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(hadoopPath, spark.sessionState.newHadoopConf()))
+    try new Footer(hadoopPath, reader.getFooter) finally reader.close()
   }
 
   /** The data files of a parquet `path`: the path itself when it is a

@@ -191,45 +191,34 @@ final class BalooSeries(val df: DataFrame, val indexCols: Seq[String], val name:
   }
 
   /** `shift(n)` — value from n positions earlier under the index order
-    * (negative n looks forward), NULL where no such position. Spelled
-    * as ordinal + equi self-join on `ord − n`: both sides shuffle on
-    * the ordinal (an equi hash join any cluster handles), instead of a
-    * global-order window.
+    * (negative n looks forward), NULL where no such position.
     */
-  def shift(n: Long = 1L): BalooSeries = {
-    require(indexCols.nonEmpty, "shift requires an index order")
-    val ord = graft.operators.Ordinal.withOrdinal(df, indexCols.map(col), "__ord")
-    val donor = ord.select((col("__ord") + n).as("__ord"), col(name).as("__shifted"))
-    new BalooSeries(
-      ord.join(donor, Seq("__ord"), "left")
-        .select(indexCols.map(col) :+ col("__shifted").as(name): _*),
-      indexCols, name)
-  }
+  def shift(n: Long = 1L): BalooSeries = lagged("shift", n)((_, prev) => prev)
 
-  /** `diff(n)` = x − shift(n) — one plan, the join from [[shift]] plus
-    * a subtraction; NULL for the first n positions like pandas.
+  /** `diff(n)` = x − shift(n) — NULL for the first n positions like
+    * pandas.
     */
-  def diff(n: Long = 1L): BalooSeries = {
-    require(indexCols.nonEmpty, "diff requires an index order")
-    val ord = graft.operators.Ordinal.withOrdinal(df, indexCols.map(col), "__ord")
-    val donor = ord.select((col("__ord") + n).as("__ord"), col(name).as("__prev"))
-    new BalooSeries(
-      ord.join(donor, Seq("__ord"), "left")
-        .select(indexCols.map(col) :+ (col(name) - col("__prev")).as(name): _*),
-      indexCols, name)
-  }
+  def diff(n: Long = 1L): BalooSeries = lagged("diff", n)(_ - _)
 
   /** `pct_change()` — relative step under the index order; zero or
     * missing previous value yields NULL (nullif guard, engine-neutral).
     */
-  def pctChange(n: Long = 1L): BalooSeries = {
-    require(indexCols.nonEmpty, "pct_change requires an index order")
+  def pctChange(n: Long = 1L): BalooSeries =
+    lagged("pct_change", n)((x, prev) => (x - prev) / nullif(prev, lit(0.0)))
+
+  /** The one plan of [[shift]], [[diff]] and [[pctChange]]: `out(x,
+    * prev)` per row, where `prev` is the value n positions earlier.
+    * Spelled as ordinal + equi self-join on `ord − n`: both sides
+    * shuffle on the ordinal (an equi hash join any cluster handles),
+    * instead of a global-order window.
+    */
+  private def lagged(op: String, n: Long)(out: (Column, Column) => Column): BalooSeries = {
+    require(indexCols.nonEmpty, s"$op requires an index order")
     val ord = graft.operators.Ordinal.withOrdinal(df, indexCols.map(col), "__ord")
     val donor = ord.select((col("__ord") + n).as("__ord"), col(name).as("__prev"))
     new BalooSeries(
       ord.join(donor, Seq("__ord"), "left")
-        .select(indexCols.map(col) :+
-          ((col(name) - col("__prev")) / nullif(col("__prev"), lit(0.0))).as(name): _*),
+        .select(indexCols.map(col) :+ out(col(name), col("__prev")).as(name): _*),
       indexCols, name)
   }
 

@@ -275,9 +275,9 @@ object CorpusStats extends QueryModule {
         Window.orderBy("n_chars")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("n_chars").as("gv"), (col("cum") - col("cnt")).as("lo"), col("cum"))
-    // corpus row count: one scalar, the only driver value — memoized so
-    // re-construction stays action-free (PlanGuardSpec)
-    val n = graft.Caches.memoSide(s, dir, "docs_count")(docs.count())
+    // corpus row count: one scalar, the only driver value — read off the
+    // footers so construction stays action-free (PlanGuardSpec)
+    val n = Tables.rows(s, dir, "documents")
     ranked
       .withColumn("p", expr(s"(r * ${n}L + n_s - 1L) DIV n_s"))
       .join(broadcast(hist), col("p") > col("lo") && col("p") <= col("cum"))

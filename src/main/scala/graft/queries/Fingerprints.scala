@@ -122,6 +122,14 @@ object Fingerprints extends QueryModule {
   private[graft] def shingleIndex(s: SparkSession, dir: String): DataFrame =
     shingleIndexOf(s, Tables.documents(s, dir))
 
+  /** The 3-word shingle that starts at 0-based word `i` of the words
+    * array `w`, as SQL — one spelling for the batch index and the
+    * streaming hashes ([[graft.streaming.StreamOps.shingleHashes]],
+    * whose lambda binds its array as `ws`).
+    */
+  private[graft] def shingleSql(w: String): String =
+    s"concat_ws(' ', element_at($w, i + 1), element_at($w, i + 2), element_at($w, i + 3))"
+
   /** [[shingleIndex]] over an arbitrary documents frame — the batch
     * path of the index-append maintenance query.
     */
@@ -135,10 +143,8 @@ object Fingerprints extends QueryModule {
       .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
       .withColumn("words", split(col("text"), " "))
       .withColumn("n", size(array_distinct(expr(
-        """CASE WHEN size(words) >= 3
-          |  THEN transform(sequence(0, size(words) - 3),
-          |    i -> concat_ws(' ', element_at(words, i + 1),
-          |           element_at(words, i + 2), element_at(words, i + 3)))
+        s"""CASE WHEN size(words) >= 3
+          |  THEN transform(sequence(0, size(words) - 3), i -> ${shingleSql("words")})
           |  ELSE array(text) END""".stripMargin))).cast("long"))
       .select(col("doc_id"), col("n"), col("words"), col("text"),
         explode(expr(
@@ -146,7 +152,7 @@ object Fingerprints extends QueryModule {
           .as("i"))
       .select(col("doc_id"), col("n"),
         when(size(col("words")) >= 3,
-          expr("concat_ws(' ', element_at(words, i + 1), element_at(words, i + 2), element_at(words, i + 3))"))
+          expr(shingleSql("words")))
           .otherwise(col("text")).as("sg"))
       .select(col("doc_id"), col("n"),
         // FULL 60-bit md5 prefix — no 2^31 reduction (object scaladoc:
@@ -286,8 +292,7 @@ object Fingerprints extends QueryModule {
     componentLabels(s, dir).count()
     standingIndex(s, dir).count()
     withSimhash(s, dir).count()
-    val docs = Tables.documents(s, dir)
-    val b = math.floor(docs.count() * 0.8).toLong
+    val b = math.floor(Tables.rows(s, dir, "documents") * 0.8).toLong
     graft.Caches.memo(s, dir, "append_batch_demo")(
       postings(s, dir).filter(col("doc_id") >= b)).count(); ()
   }
@@ -358,8 +363,7 @@ object Fingerprints extends QueryModule {
     * BEFORE any batch arrives, by definition of maintenance).
     */
   private def standingIndex(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val b = math.floor(docs.count() * 0.8).toLong // one scalar, as in the CC loop
+    val b = math.floor(Tables.rows(s, dir, "documents") * 0.8).toLong // one scalar, as in the CC loop
     // Shingling is PER-DOC, so the 80% index is exactly a doc_id filter
     // of the full posting artifact (filter ∘ shingle ≡ shingle ∘ filter,
     // and dropDuplicates commutes with a doc_id predicate) — derive it
@@ -370,8 +374,7 @@ object Fingerprints extends QueryModule {
   }
 
   def qDedupIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val b = math.floor(docs.count() * 0.8).toLong
+    val b = math.floor(Tables.rows(s, dir, "documents") * 0.8).toLong
     // phase 1: the standing artifact (memoized; prewarm built it)
     standingIndex(s, dir).count()
     // The staged batch increment is ITSELF an artifact (a production

@@ -954,13 +954,11 @@ object Similarity extends QueryModule {
     * replicates to cells (blk, j≥blk), the right to cells (i≤blk, blk),
     * so every unordered pair meets in EXACTLY ONE of the K(K+1)/2
     * cells. One equi-join on the cell id, codegen'd long dot per pair;
-    * K from [[gridK]] (the corpus count reads off the cached artifact).
+    * K from [[gridK]] (the corpus count reads off the parquet footers).
     */
   def qDedupEmbed(s: SparkSession, dir: String): DataFrame = {
-    // corpus count memoized: one scalar per (session, corpus), no
-    // per-construction job (PlanGuardSpec)
-    val K = gridK(graft.Caches.memoSide(s, dir, "embed_count")(
-      quantized(s, dir).count()))
+    // corpus count off the footers: no per-construction job (PlanGuardSpec)
+    val K = gridK(Tables.rows(s, dir, "embeddings"))
     val emb = quantized(s, dir).withColumn("blk", pmod(col("vec_id"), lit(K)))
     val a = emb
       .withColumn("j", explode(expr(s"sequence(blk, ${K - 1})")))
@@ -1305,7 +1303,7 @@ object Similarity extends QueryModule {
     // candidate exchange — this check was the most expensive in the gate
     // at 255 s/run purely from that payload ride).
     val bands = bandIds(s, dir)
-    val n = Tables.embeddings(s, dir).count()
+    val n = Tables.rows(s, dir, "embeddings")
     val s1 = (n * 6L) / 10L
     val s2 = (n * 8L) / 10L
     val emb = quantized(s, dir)

@@ -99,9 +99,7 @@ object StreamOps {
       |  array_distinct(transform(
       |    CASE WHEN size(ws) >= 3
       |      THEN transform(sequence(0, size(ws) - 3),
-      |        i -> concat_ws(' ', element_at(ws, i + 1),
-      |               element_at(ws, i + 2),
-      |               element_at(ws, i + 3)))
+      |        i -> ${graft.queries.Fingerprints.shingleSql("ws")})
       |      ELSE array(text) END,
       |    sg -> ${graft.queries.Fingerprints.hashOfSql("sg")}))), 1)""".stripMargin)
 

@@ -23,6 +23,20 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(Scratch.root, prefix).toString
 
+  /** Spark jobs run by `body`, counted through a fresh job group on the
+    * shared SparkContext (every session of the JVM runs its jobs there).
+    * The status store is fed by the async listener bus, so the count
+    * waits 2 s for it to drain.
+    */
+  def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "SparkSpec job count")
+    try body finally sc.clearJobGroup()
+    Thread.sleep(2000)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   /** Normalize a row for comparison: floats rounded to `places`. */
   private def norm(r: Row, places: Int): Seq[Any] =
     r.toSeq.map {

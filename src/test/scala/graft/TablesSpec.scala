@@ -7,7 +7,9 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 /** `Tables.load` opens each relation with the schema of its parquet
   * footer, read on the driver: the schema must be the one `spark.read`
   * infers, for the testdata's single files and for Spark-written
-  * directories, and registering the tables must run no Spark job.
+  * directories, `Tables.rows` must equal the row count `spark.read`
+  * finds, and registering the tables or counting their rows must run
+  * no Spark job.
   */
 class TablesSpec extends SparkSpec {
 
@@ -16,9 +18,12 @@ class TablesSpec extends SparkSpec {
 
   test("footer schema equals the inferred schema for every testdata table") {
     for (dir <- Seq(PlanShapeSpec.SfDir, "/root/testdata/sf0.001");
-         name <- Tables.names)
+         name <- Tables.names) {
       assert(Tables.load(spark, dir, name).schema == inferred(dir, name),
         s"$dir/$name")
+      assert(Tables.rows(spark, dir, name) ==
+        spark.read.parquet(s"$dir/$name.parquet").count(), s"$dir/$name rows")
+    }
   }
 
   /** A Spark-written 3-file directory `mixed.parquet` of 30 rows over
@@ -51,6 +56,7 @@ class TablesSpec extends SparkSpec {
     assert(df.schema.length == 17)
     assert(df.schema == inferred(mixedDir, "mixed"))
     assert(df.count() == 30)
+    assert(Tables.rows(spark, mixedDir, "mixed") == spark.read.parquet(path).count())
   }
 
   test("dataFiles of a Spark-written 3-file directory are exactly its part files") {
@@ -64,18 +70,14 @@ class TablesSpec extends SparkSpec {
 
   test("loading the ten tables and constructing q1_agg runs no Spark job") {
     val fresh = Tables.prep(spark.newSession())
-    val sc = fresh.sparkContext
-    val group = s"tables-${java.util.UUID.randomUUID()}"
+    val sf = PlanShapeSpec.SfDir
     try {
-      sc.setJobGroup(group, "TablesSpec job-free registration")
-      val events = try {
-        Tables.names.foreach(Tables.load(fresh, PlanShapeSpec.SfDir, _))
-        SparkEntry.queries("q1_agg")(fresh, PlanShapeSpec.SfDir)
-        Tables.events(fresh, PlanShapeSpec.SfDir)
-      } finally sc.clearJobGroup()
-      // the status store is fed by the async listener bus — let it drain
-      Thread.sleep(2000)
-      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+      assert(jobs {
+        Tables.names.foreach { n => Tables.load(fresh, sf, n); Tables.rows(fresh, sf, n) }
+        SparkEntry.queries("q1_agg")(fresh, sf)
+        Tables.events(fresh, sf)
+      } == 0)
+      val events = Tables.events(fresh, sf)
       assert(events.schema("ts").dataType == TimestampType)
       assert(events.schema("ts_ns").dataType == LongType)
     } finally Caches.clear(fresh)

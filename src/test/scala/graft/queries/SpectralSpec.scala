@@ -94,15 +94,6 @@ class SpectralSpec extends SparkSpec {
 
   test("3-round power iteration builds with one job from the warm Gram; warm reads run none") {
     val fresh = Tables.prep(spark.newSession())
-    val sc = fresh.sparkContext
-    def jobs(body: => Unit): Int = {
-      val group = s"spectral-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(group, "SpectralSpec job count")
-      try body finally sc.clearJobGroup()
-      // the status store is fed by the async listener bus — let it drain
-      Thread.sleep(2000)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
     try {
       Spectral.prewarm(fresh, dir)
       assert(jobs(Spectral.qPcaPower2(fresh, dir)) == 1, "build: the Gram collect")
