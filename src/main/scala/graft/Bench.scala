@@ -5,7 +5,9 @@ import java.util.Locale
 import scala.collection.immutable.SeqMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: times the SparkEntry query suite at the given scale
   * factor and prints one JSON line. Headline numbers feed BENCH_r{N}.json
@@ -138,6 +140,22 @@ object Bench {
     } catch { case _: Throwable => } // best effort — never fail the bench
   }
 
+  /** Classes Spark has compiled in this JVM and their Janino nanoseconds.
+    * The first call initializes Spark's code generator, which sizes its
+    * class cache from the conf of that moment, so call it only after
+    * [[Tables.prep]].
+    */
+  private[graft] def compiles(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** The detail file's `codegen` object: the classes compiled and the
+    * Janino seconds of each phase, from [[compiles]] read at the start
+    * (`marks.head`) and at the end of each named phase.
+    */
+  private[graft] def codegenDetail(marks: Seq[(String, (Long, Long))]): SeqMap[String, Any] =
+    SeqMap.from(marks.sliding(2).collect { case Seq((_, (c0, t0)), (phase, (c1, t1))) =>
+      phase -> SeqMap("classes" -> (c1 - c0), "janino_s" -> (t1 - t0) / 1e9) })
+
   /** A registered query: the suite's unit of timing. */
   private type Query = (SparkSession, String) => DataFrame
 
@@ -153,6 +171,7 @@ object Bench {
     // host steal from plan regressions without a re-run.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val load0 = osBean.getSystemLoadAverage
+    val compiled = Seq.newBuilder[(String, (Long, Long))] += "start" -> compiles()
 
     // Warm the JVM + parquet footers once so timings measure the queries,
     // not first-touch class loading.
@@ -193,6 +212,7 @@ object Bench {
       .map { case (t, out) => t.join(); out.get().fold(throw _, identity) }
       .filter(_._2 >= 0.005)
     val prepSec = (System.nanoTime() - prepT0) / 1e9
+    compiled += "prep" -> compiles()
 
     // Optional comma-separated query filter for targeted profiling.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -215,6 +235,7 @@ object Bench {
     // that throws in warmup is pushed to the sequential leg so its
     // failure is re-observed (and recorded) under clean timing.
     val cold = selected.map { case (name, fn) => (name, fn, run(name, fn).isDefined) }
+    compiled += "warmup" -> compiles()
     // Warm SEQUENTIAL pass (protocol 2): one contention-free, warm,
     // all-sequential per-query series — the pre-round-7 timing
     // discipline, re-measured every round as the cross-round continuity
@@ -238,6 +259,7 @@ object Bench {
         (name, fn, Some(run(name, fn).fold(t)(math.min(t, _))))
       case w => w
     }
+    compiled += "seq" -> compiles()
     val seqSum = warm.flatMap(_._3).sum
     // The pre-re-measure sum — the single-shot discipline every round
     // before 11 recorded. Emitting both lets a cross-round reader
@@ -288,6 +310,9 @@ object Bench {
     }
     workers.foreach(_.join())
     val lightWall = (System.nanoTime() - lightT0) / 1e9
+    compiled += "timed" -> compiles()
+    val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").fold(-1.0)(_.getUsage.getUsed / 1048576.0)
     val pooled = lightResults.asScala.toSeq
     val results = (heavyResults ++ pooled).sortBy(_._1)
 
@@ -315,7 +340,11 @@ object Bench {
     val anchor = !sentinelSlow && load0 < 0.5
 
     // Full-precision detail for offline reading (best effort — the
-    // printed line is the artifact of record).
+    // printed line is the artifact of record). `codegen` holds the
+    // classes compiled in each phase and `metaspace_mb` the class
+    // metadata in use after the timed legs. A warm phase compiles a few
+    // dozen classes for AQE's plan variants; thousands mean a codegen
+    // cache too small for the suite (see Tables.prep).
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(DetailFile),
         jsonMapper.writeValueAsString(SeqMap(
@@ -327,7 +356,9 @@ object Bench {
           "load" -> Seq(load0, load1), "load_skewed" -> loadSkewed,
           "anchor" -> anchor, "codegen_fallbacks" -> codegenFallbacks,
           "sf" -> sfDir, "queries" -> SeqMap.from(results),
-          "seq" -> SeqMap.from(warm.collect { case (k, _, Some(t)) => k -> t }))) + "\n")
+          "seq" -> SeqMap.from(warm.collect { case (k, _, Some(t)) => k -> t }),
+          "codegen" -> codegenDetail(compiled.result()),
+          "metaspace_mb" -> metaspaceMb)) + "\n")
     } catch { case _: Throwable => }
 
     println(line(total = total, qSum = qSum, seqSum = seqSum,

@@ -22,11 +22,33 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Size of Spark's codegen class cache; see [[prep]]. */
+  val CodegenCacheEntries = 4096
+
   /** Defensive session prep: oracle parity needs UTC + non-ANSI eval
     * (Spark 4 defaults ANSI on; the reference's semantics — and DuckDB's
     * behavior on e.g. out-of-range element_at — match the permissive mode).
+    *
+    * It also sizes the engine: Spark keeps compiled Janino classes in one
+    * JVM-wide LRU of [[CodegenCacheEntries]] entries, keyed by (class
+    * loader, source), so in local mode a whole-stage class takes two
+    * entries (the driver's check compile and the executor's). The
+    * default of 100 is smaller than one pass of the suite, so a pass that
+    * repeats the previous one missed on every access and recompiled
+    * everything: Bench's warm sequential pass of all 268 queries at sf0.1
+    * on 4 cores compiled about 2,550 classes (21 s of Janino). The suite
+    * needs about 2,200 entries: Bench's prep compiles about 555 classes
+    * and its first pass about 1,650.
+    *
+    * The cache is static conf that `spark.conf.set` refuses, so it is
+    * written into the session's conf directly. Spark reads it once per
+    * JVM, when `CodeGenerator` is first touched, so it holds only if
+    * `prep` runs before the JVM's first query: `Session.start` and
+    * [[load]] both call it first.
     */
   def prep(spark: SparkSession): SparkSession = {
+    spark.sessionState.conf.setConfString(
+      "spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // events.parquet carries TIMESTAMP(NANOS) which vanilla Spark rejects;

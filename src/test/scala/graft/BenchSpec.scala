@@ -32,6 +32,15 @@ class BenchSpec extends AnyFunSuite {
     assert(shown == (299 to 0 by -1).map(i => f"query_$i%03d").take(shown.length))
   }
 
+  test("the detail's codegen object holds each phase's compiles, in phase order") {
+    val marks = Seq("start" -> (10L, 1000000000L), "prep" -> (560L, 9000000000L),
+      "warmup" -> (2200L, 20500000000L), "seq" -> (2200L, 20500000000L),
+      "timed" -> (2201L, 20750000000L))
+    assert(jsonMapper.writeValueAsString(Bench.codegenDetail(marks)) ==
+      """{"prep":{"classes":550,"janino_s":8.0},"warmup":{"classes":1640,"janino_s":11.5},""" +
+      """"seq":{"classes":0,"janino_s":0.0},"timed":{"classes":1,"janino_s":0.25}}""")
+  }
+
   test("a failed query prints -1.00 and is listed, sorted, in failed") {
     val out = line(Seq("q_slow" -> 2.5, "q_zbad" -> -1.0, "q_abad" -> -1.0),
       pooled = Seq(0.5, -1.0), failed = Seq("q_zbad", "q_pool_bad", "q_abad"))

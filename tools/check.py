@@ -2,10 +2,12 @@
 """Local mirror of the driver's correctness gate: run each oracle SQL in
 DuckDB over the same parquet tables and compare with the Verify output
 (columns sorted by name, exact value match; floats compared bit-near).
+Each oracle line carries its DuckDB seconds, and the ten slowest oracle
+queries are listed before the final line.
 
 Usage: python3 tools/check.py <verify_outdir> <sf_dir>
 """
-import sys, json, glob, math
+import sys, json, glob, math, time
 import duckdb
 import pandas as pd
 
@@ -62,6 +64,7 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     failures = 0
+    duck_s = {}
     for name in sorted(oracle):
         sql = oracle[name]
         files = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
@@ -70,18 +73,20 @@ def main():
             failures += 1
             continue
         got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
+        t0 = time.perf_counter()
         try:
             exp = con.execute(sql).df()
         except Exception as e:
-            print(f"[FAIL] {name}: oracle SQL error: {e}")
+            print(f"[FAIL] {name}: oracle SQL error after {time.perf_counter() - t0:.2f} s: {e}")
             failures += 1
             continue
+        duck_s[name] = time.perf_counter() - t0
         err = cmp_frames(name, got, exp)
         if err:
-            print(f"[FAIL] {name}: {err}")
+            print(f"[FAIL] {name} ({duck_s[name]:.2f} s duckdb): {err}")
             failures += 1
         else:
-            print(f"[ ok ] {name} ({len(got)} rows)")
+            print(f"[ ok ] {name} ({len(got)} rows, {duck_s[name]:.2f} s duckdb)")
     # queries without oracle: rows-only check
     for d in sorted(glob.glob(f"{outdir}/*/")):
         name = d.rstrip("/").split("/")[-1]
@@ -91,6 +96,9 @@ def main():
         n = sum(pd.read_parquet(f).shape[0] for f in files) if files else 0
         print(f"[{'ok..' if n > 0 else 'FAIL'}] {name} rows-only: {n}")
         failures += 0 if n > 0 else 1
+    print(f"slowest oracle queries ({sum(duck_s.values()):.1f} s duckdb in all):")
+    for name in sorted(duck_s, key=duck_s.get, reverse=True)[:10]:
+        print(f"  {duck_s[name]:8.2f} s  {name}")
     print(f"{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
     sys.exit(1 if failures else 0)
 
