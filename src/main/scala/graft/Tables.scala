@@ -32,7 +32,7 @@ object Tables {
     * It also sizes the engine: Spark keeps compiled Janino classes in one
     * JVM-wide LRU of [[CodegenCacheEntries]] entries, keyed by (class
     * loader, source), so in local mode a whole-stage class takes two
-    * entries (the driver's check compile and the executor's). The
+    * entries (one compiled while planning, one in the task). The
     * default of 100 is smaller than one pass of the suite, so a pass that
     * repeats the previous one missed on every access and recompiled
     * everything: Bench's warm sequential pass of all 268 queries at sf0.1
