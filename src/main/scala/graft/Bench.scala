@@ -162,8 +162,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     installCodegenFailCounter()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Session.cpus(Session.Profile.Bench, sys.env)
-    val spark = Session.start(Session.Profile.Bench)
+    val cpus = Session.cpus(sys.env)
+    val spark = Session.start(cpus)
 
     // Host 1-minute load average at start and end of the run: the
     // shared-host noise signature (documented in BASELINE.md) shows up

@@ -22,9 +22,9 @@ import graft.queries.Fingerprints
   *  - `artifacts` times each materialized corpus artifact build on its
   *    own — the chain Bench reports in aggregate as `prep`.
   *
-  * `plan` and `artifacts` run on the bench session, `leg` on the gate
-  * session, so each reproduces the numbers of the main it diagnoses.
-  * Trailing `spark.x=y` arguments set runtime SQL conf, e.g.
+  * Every subcommand runs on the one graft session; `leg` adds
+  * [[ScaleStress.gateConf]], so each reproduces the numbers of the main
+  * it diagnoses. Trailing `spark.x=y` arguments set runtime SQL conf, e.g.
   * `spark.sql.autoBroadcastJoinThreshold=-1` for the join shapes a
   * too-big-to-broadcast build side forces at scale.
   */
@@ -34,15 +34,15 @@ object Dev {
 
   def main(args: Array[String]): Unit = {
     val (confArgs, cmd) = args.toList.partition(_.matches("spark\\.[^=]+=.*"))
-    val (profile, run): (Session.Profile, SparkSession => Unit) = cmd match {
-      case List("plan", sfDir, names) => (Session.Profile.Bench, plan(_, sfDir, names))
-      case List("leg", names) => (Session.Profile.Gate, leg(_, names))
-      case List("artifacts", sfDir) => (Session.Profile.Bench, artifacts(_, sfDir))
+    val run: SparkSession => Unit = cmd match {
+      case List("plan", sfDir, names) => plan(_, sfDir, names)
+      case List("leg", names) => leg(_, names)
+      case List("artifacts", sfDir) => artifacts(_, sfDir)
       case _ =>
         System.err.println(Usage)
         sys.exit(2)
     }
-    val spark = Session.start(profile)
+    val spark = Session.start(Session.cpus(sys.env))
     confArgs.foreach { kv =>
       val i = kv.indexOf('=')
       spark.conf.set(kv.substring(0, i), kv.substring(i + 1))
@@ -73,8 +73,9 @@ object Dev {
     Seq(d10, d100).foreach { d =>
       require(new java.io.File(d).isDirectory, s"$d missing: run graft.ScaleStress first")
     }
+    ScaleStress.gateConf(spark)
     queries(names).foreach { case (q, _) =>
-      val t10 = ScaleStress.timedLeg(spark, d10, q, 32)
+      val t10 = ScaleStress.timedLeg(spark, d10, q, ScaleStress.GateParts)
       val t100 = ScaleStress.timedLeg(spark, d100, q, 128)
       println(f"LEG $q t10=$t10%.1f s t100=$t100%.1f s ratio=${t100 / t10}%.1f")
     }

@@ -4,6 +4,7 @@ import scala.collection.immutable.SeqMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** 10× scale-stress harness — flushes the SAMPLE-SIZE-DEPENDENT bug
   * class the DuckDB gate cannot see.
@@ -294,7 +295,7 @@ object ScaleStress {
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)
     Caches.clear(s)
     try fingerprint(SparkEntry.queries(q)(s, dir))
-    finally s.conf.set("spark.sql.shuffle.partitions", "32")
+    finally s.conf.set("spark.sql.shuffle.partitions", GateParts.toString)
   }
 
   // ---- parameterized planted-truth bodies — ONE spelling shared by
@@ -388,7 +389,7 @@ object ScaleStress {
     * actions on cold caches) counts. Shuffle partitions scale with the
     * corpus (32 → 128), the knob a real cluster (or AQE) turns with data
     * volume — fixed 32 spills the 100× substring aggregation — and go
-    * back to the gate's 32 afterwards.
+    * back to the gate's [[GateParts]] afterwards.
     */
   def timedLeg(spark: SparkSession, d: String, q: String, parts: Int): Double = {
     def once(): Double = {
@@ -399,12 +400,27 @@ object ScaleStress {
       (System.nanoTime() - t0) / 1e9
     }
     try math.min(once(), once())
-    finally spark.conf.set("spark.sql.shuffle.partitions", "32")
+    finally spark.conf.set("spark.sql.shuffle.partitions", GateParts.toString)
+  }
+
+  /** The gate's shuffle partitions on any host, and its 10× legs'. */
+  val GateParts = 32
+
+  /** The gate's one deviation from [[Session.settings]]: [[GateParts]]
+    * shuffle partitions and Spark's default split size and open cost.
+    * Its recorded leg times and 10×/100× ratios were taken that way, and
+    * aligning them with bench needs a fresh recorded gate run.
+    */
+  def gateConf(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.shuffle.partitions", GateParts.toString)
+    Seq(SQLConf.FILES_MAX_PARTITION_BYTES, SQLConf.FILES_OPEN_COST_IN_BYTES)
+      .foreach(e => spark.conf.set(e.key, e.defaultValueString))
   }
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/scale10")
-    val spark = Session.start(Session.Profile.Gate)
+    val spark = Session.start(Session.cpus(sys.env))
+    gateConf(spark)
 
     val t0 = System.nanoTime()
     generate(spark, dir)
@@ -730,7 +746,7 @@ object ScaleStress {
         // timing the 10× leg is recorded as this check's failure
         // instead of aborting the whole gate run uncaught.
         check(s"scale100_cost_$q") {
-          val t10 = timedLeg(spark, dir, q, 32)
+          val t10 = timedLeg(spark, dir, q, GateParts)
           val t100 = timedLeg(spark, dir100, q, 128)
           val ratio = t100 / t10
           legTimes(q) = (t10, t100)

@@ -8,7 +8,7 @@ import org.apache.commons.io.FileUtils
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Session.start(Session.Profile.Verify)
+    val spark = Session.start(Session.cpus(sys.env))
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated filter (local iteration only; the driver
     // always runs the full set).

@@ -74,31 +74,4 @@ object Ordinal {
     import org.apache.spark.sql.functions.col
     withOrdinal(df, order).filter(col("ord") === i)
   }
-
-  /** Gather rows by an arbitrary position array — reference
-    * `iloc[indices]` (`weld_iloc_indices`, `weld_ops.py:333-367`):
-    * broadcast-join the (small) index list against the ordinal column;
-    * positions ≥ length simply match nothing (the reference emits a
-    * missing sentinel there — `weld_ops.py:370-414` — which callers get
-    * by left-joining from their indices instead).
-    */
-  def gather(df: DataFrame, order: Seq[Column], positions: Seq[Long]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val idx = positions.toDF("ord")
-    withOrdinal(df, order).join(broadcast(idx), "ord")
-  }
-
-  /** Gather preserving out-of-range positions as all-NULL rows — the
-    * reference's missing-sentinel gather (`weld_iloc_indices_with_missing`,
-    * `weld_ops.py:370-414`): one output row per requested position, data
-    * columns NULL where the position does not exist. Left join FROM the
-    * (small, broadcast-side-reversed) position list.
-    */
-  def gatherWithMissing(df: DataFrame, order: Seq[Column], positions: Seq[Long]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val idx = positions.toDF("ord")
-    idx.join(withOrdinal(df, order), Seq("ord"), "left")
-  }
 }

@@ -22,9 +22,12 @@ import org.apache.spark.sql.functions._
 object CorpusQuality extends QueryModule {
 
   override def prewarm(s: SparkSession, dir: String): Unit = {
-    graft.Caches.memo(s, dir, "dsir_grams")(
-      dsirGrams(graft.Tables.documents(s, dir))).count(); ()
+    corpusDsirGrams(s, dir).count(); ()
   }
+
+  /** The corpus's [[dsirGrams]], memoized: prep builds it, qDsirSelect reads it. */
+  private def corpusDsirGrams(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.memo(s, dir, "dsir_grams")(dsirGrams(Tables.documents(s, dir)))
 
   /** Gopher-style repetition signals: duplicate-word fraction and the
     * fraction of word-bigrams claimed by the single most frequent bigram
@@ -841,9 +844,7 @@ object CorpusQuality extends QueryModule {
     */
   def qDsirSelect(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select("doc_id", "lang", "source")
-      .join(dsirScoresFromGrams(
-        graft.Caches.memo(s, dir, "dsir_grams")(
-          dsirGrams(Tables.documents(s, dir))), targetLang = "en"),
+      .join(dsirScoresFromGrams(corpusDsirGrams(s, dir), targetLang = "en"),
         Seq("doc_id"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(100)

@@ -292,9 +292,7 @@ object Fingerprints extends QueryModule {
     componentLabels(s, dir).count()
     standingIndex(s, dir).count()
     withSimhash(s, dir).count()
-    val b = math.floor(Tables.rows(s, dir, "documents") * 0.8).toLong
-    graft.Caches.memo(s, dir, "append_batch_demo")(
-      postings(s, dir).filter(col("doc_id") >= b)).count(); ()
+    appendBatch(s, dir).count(); ()
   }
 
   /** Incremental-ingest dedup: the last 20% of the corpus (by doc_id)
@@ -373,17 +371,23 @@ object Fingerprints extends QueryModule {
       postings(s, dir).filter(col("doc_id") < b))
   }
 
-  def qDedupIndexAppend(s: SparkSession, dir: String): DataFrame = {
+  /** The staged batch increment, built in [[prewarm]] and merged by
+    * [[qDedupIndexAppend]]. It is ITSELF an artifact (a production batch
+    * arrives as already-shingled staged data): the complementary doc_id
+    * filter of the full posting artifact (same per-doc commutation as
+    * [[standingIndex]]), memoized so the merge path reads staged rows,
+    * never the shingle map.
+    */
+  private def appendBatch(s: SparkSession, dir: String): DataFrame = {
     val b = math.floor(Tables.rows(s, dir, "documents") * 0.8).toLong
+    graft.Caches.memo(s, dir, "append_batch_demo")(
+      postings(s, dir).filter(col("doc_id") >= b))
+  }
+
+  def qDedupIndexAppend(s: SparkSession, dir: String): DataFrame = {
     // phase 1: the standing artifact (memoized; prewarm built it)
     standingIndex(s, dir).count()
-    // The staged batch increment is ITSELF an artifact (a production
-    // batch arrives as already-shingled staged data) — derived as the
-    // complementary doc_id filter of the full posting artifact (same
-    // per-doc commutation as [[standingIndex]]), memoized so the merge
-    // path reads staged rows, never the shingle map.
-    val batch = graft.Caches.memo(s, dir, "append_batch_demo")(
-      postings(s, dir).filter(col("doc_id") >= b))
+    val batch = appendBatch(s, dir)
     // phase 2: merge the batch in place. MERGE INTO semantics: the
     // batch anti-joins the standing doc set, so the append is
     // idempotent WITHOUT re-shuffling the standing index — the

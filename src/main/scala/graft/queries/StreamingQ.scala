@@ -169,12 +169,18 @@ object StreamingQ extends QueryModule {
     * batches becoming visible — breaks a count or the checksum.
     */
   def qStreamShardSink(s: SparkSession, dir: String): DataFrame =
-    StreamDrain.drainedFiles(s, dir, "stream_shard_sink", "documents")(st => st)
+    shardSink(s, dir)
       .groupBy("source").agg(
         count(lit(1)).as("n_docs"),
         sum(length(col("text")).cast("long")).as("n_chars"),
         Q.checksum("text").as("checksum"))
       .orderBy("source")
+
+  /** `documents` drained unchanged through the exactly-once parquet
+    * sink — read by [[qStreamShardSink]] and [[qSinkCompaction]].
+    */
+  private def shardSink(s: SparkSession, dir: String): DataFrame =
+    StreamDrain.drainedFiles(s, dir, "stream_shard_sink", "documents")(st => st)
 
   /** Streaming NEAR-DUP ingest gate, driver-checked: each arriving
     * document (the 10% "today's crawl" slice, doc_id % 10 = 7) is
@@ -357,8 +363,7 @@ object StreamingQ extends QueryModule {
     */
   def qSinkCompaction(s: SparkSession, dir: String): DataFrame =
     graft.Caches.memoSide(s, dir, "sink_compacted") {
-      val sunk = StreamDrain.drainedFiles(s, dir, "stream_shard_sink",
-        "documents")(st => st)
+      val sunk = shardSink(s, dir)
       // Session-scoped scratch: the dir goes with this side value on
       // Caches.clear, not parked until JVM exit.
       val out = graft.Scratch.dirFor(s, "compact")

@@ -27,10 +27,10 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * comes from the FINAL adaptive plan, subqueries included, since stage
   * reuse and runtime join swaps show only there.
   *
-  * Protocol: bench's `spark.sql.*` settings on 4 cores, over the
-  * committed sf0.01 copy of the testdata. Pass 1 executes every pinned
-  * query once, so memoized `Caches` artifacts are warm (cold and warm
-  * plans differ); pass 2 rebuilds and executes each query and records
+  * Protocol: the test session (the one [[Session.settings]] map on 4
+  * cores), over the committed sf0.01 copy of the testdata. Pass 1
+  * executes every pinned query once, so memoized `Caches` artifacts are
+  * warm (cold and warm plans differ); pass 2 rebuilds and executes each query and records
   * its signature. A mismatch fails with the replacement lines: an
   * intended plan change is one reviewed diff to the file.
   */
@@ -53,15 +53,13 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("every pinned query keeps its plan shape") {
     val t0 = System.nanoTime()
-    val got = withConf(BenchSql) {
-      pins.foreach(p => withConf(p.conf)(p.build(spark).collect()))
-      pins.map { p =>
-        withConf(p.conf) {
-          val df = p.build(spark)
-          val exchanges = count(df.queryExecution.executedPlan, classOf[ShuffleExchangeExec])
-          df.collect()
-          signature(exchanges, df.queryExecution.executedPlan)
-        }
+    pins.foreach(p => withConf(p.conf)(p.build(spark).collect()))
+    val got = pins.map { p =>
+      withConf(p.conf) {
+        val df = p.build(spark)
+        val exchanges = count(df.queryExecution.executedPlan, classOf[ShuffleExchangeExec])
+        df.collect()
+        signature(exchanges, df.queryExecution.executedPlan)
       }
     }
     info(f"${pins.size} queries, two passes: ${(System.nanoTime() - t0) / 1e9}%.1f s")
@@ -115,9 +113,6 @@ object PlanShapeSpec {
   val ShapesFile = "docs/PLAN_SHAPES.txt"
   /** The committed copy of the sf0.01 testdata that perfbench runs on. */
   val SfDir = "perfbench/data/sf0.01"
-  /** Bench's runtime SQL settings on the test session's 4 cores. */
-  val BenchSql: Seq[(String, String)] =
-    Session.settings(Session.Profile.Bench, 4).toSeq.filter(_._1.startsWith("spark.sql.")).sorted
 
   final case class Pin(name: String, conf: Seq[(String, String)], sig: String, reason: String) {
     def key: String = (name +: conf.map { case (k, v) => s"$k=$v" }).mkString(" ")

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hash-order-nondeterministic ops and float tolerance.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = Session.start(Session.Profile.Test)
+  lazy val spark: SparkSession = Session.start(4)
 }
 
 trait SparkSpec extends AnyFunSuite {

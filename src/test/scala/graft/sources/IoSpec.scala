@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.operators.Ordinal
 import org.apache.spark.sql.functions.col
 
 /** CSV round-trip (reference golden-file test `tests/io/test_csv.py:
@@ -107,10 +106,13 @@ class IoSpec extends SparkSpec {
   }
 
   test("gather fetches rows at arbitrary positions; OOB positions drop") {
-    val df = Seq(30, 10, 50, 20, 40).toDF("v")
-    val out = Ordinal.gather(df, Seq(col("v")), Seq(0L, 3L, 99L))
-      .orderBy("ord").collect().map(_.getInt(1)).toSeq
-    assert(out == Seq(10, 40))
+    // q_iloc_gather asks for 31337, 0, 59999, 7 and 1234; sf0.001
+    // lineitem ends before 31337, so the two larger positions match nothing.
+    val dir = "/root/testdata/sf0.001"
+    assert(graft.Tables.rows(spark, dir, "lineitem") <= 31337L)
+    val out = graft.SparkEntry.queries("q_iloc_gather")(spark, dir)
+      .collect().map(_.getAs[Long]("ord")).toSeq
+    assert(out == Seq(0L, 7L, 1234L))
   }
 
   test("compaction rewrites a fragmented dataset into few sorted bounded files") {
