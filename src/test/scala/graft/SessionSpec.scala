@@ -6,7 +6,8 @@ package graft
   */
 class SessionSpec extends SparkSpec {
 
-  test("one settings map on N cores: cores partitions, AQE with SHJ 64m, FAIR, 1 MB splits") {
+  // The one settings map, which Bench (and every other session) runs on
+  test("bench profile: cores partitions, AQE with SHJ 64m, FAIR, 1 MB splits") {
     assert(Session.settings(8) == Map(
       "spark.master" -> "local[8]",
       "spark.app.name" -> "graft",
