@@ -187,31 +187,28 @@ object Bench {
     // artifact on its holder, so the overlap cannot double-build.
     // Per-module seconds are each thread's own elapsed (they overlap;
     // their sum exceeds the wall-clock `prep` field).
-    val prepT0 = System.nanoTime()
-    val prepThreads = SparkEntry.modules.map { m =>
-      val name = m.getClass.getSimpleName.stripSuffix("$")
-      val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, (String, Double)]]()
-      val t = new Thread(() => {
-        // Prep threads share the DEFAULT pool on purpose: within a pool
-        // jobs run FIFO, which lets the critical-path chain (the posting
-        // index every other module waits on) hog the executor early with
-        // the independent builds backfilling — per-thread FAIR pools
-        // here measurably slowed the wall (+7 s at sf0.1) by splitting
-        // resources away from the chain everything blocks on.
-        val t0 = System.nanoTime()
-        try {
-          m.prewarm(spark, sfDir)
-          out.set(Right(name -> (System.nanoTime() - t0) / 1e9))
-        } catch { case e: Throwable => out.set(Left(e)) }
-      }, s"prewarm-$name")
-      t.start(); (t, out)
+    val (prepDetail, prepSec) = timed {
+      val prepThreads = SparkEntry.modules.map { m =>
+        val name = m.getClass.getSimpleName.stripSuffix("$")
+        val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, (String, Double)]]()
+        val t = new Thread(() => {
+          // Prep threads share the DEFAULT pool on purpose: within a pool
+          // jobs run FIFO, which lets the critical-path chain (the posting
+          // index every other module waits on) hog the executor early with
+          // the independent builds backfilling — per-thread FAIR pools
+          // here measurably slowed the wall (+7 s at sf0.1) by splitting
+          // resources away from the chain everything blocks on.
+          try out.set(Right(name -> timed(m.prewarm(spark, sfDir))._2))
+          catch { case e: Throwable => out.set(Left(e)) }
+        }, s"prewarm-$name")
+        t.start(); (t, out)
+      }
+      // A failed prewarm must fail the bench with ITS exception (as the
+      // sequential loop did), not a downstream null from the dead thread.
+      prepThreads
+        .map { case (t, out) => t.join(); out.get().fold(throw _, identity) }
+        .filter(_._2 >= 0.005)
     }
-    // A failed prewarm must fail the bench with ITS exception (as the
-    // sequential loop did), not a downstream null from the dead thread.
-    val prepDetail = prepThreads
-      .map { case (t, out) => t.join(); out.get().fold(throw _, identity) }
-      .filter(_._2 >= 0.005)
-    val prepSec = (System.nanoTime() - prepT0) / 1e9
     compiled += "prep" -> compiles()
 
     // Optional comma-separated query filter for targeted profiling.
@@ -225,8 +222,7 @@ object Bench {
     // queries correctly in the UI / event log.
     def run(name: String, fn: Query): Option[Double] = {
       spark.sparkContext.setJobDescription(name)
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      try Some(timed(fn(spark, sfDir).count())._2)
       catch { case _: Throwable => None }
       finally spark.sparkContext.setJobDescription(null)
     }
@@ -284,32 +280,31 @@ object Bench {
     def timedRun(name: String, fn: Query): Double =
       run(name, fn).getOrElse { failed.add(name); -1.0 }
 
-    val timedT0 = System.nanoTime()
     // Leg 1: the heavy queries, one at a time, whole executor each.
-    val heavyResults = warm.collect { case (name, fn, _) if heavyNames(name) =>
-      name -> timedRun(name, fn)
+    val (heavyResults, heavyWall) = timed {
+      warm.collect { case (name, fn, _) if heavyNames(name) => name -> timedRun(name, fn) }
     }
-    val heavyWall = (System.nanoTime() - timedT0) / 1e9
     // Leg 2: everything else through a fixed worker pool. Results keep
     // per-query elapsed (contention-inclusive) for the detail file.
-    val lightT0 = System.nanoTime()
-    val lightQueue = new java.util.concurrent.ConcurrentLinkedQueue[(String, Query)]()
-    warm.foreach { case (name, fn, _) => if (!heavyNames(name)) lightQueue.add((name, fn)) }
-    val lightResults = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-    val workers = (0 until PoolSize).map { i =>
-      val t = new Thread(() => {
-        // own pool per worker — see the prep threads' comment
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"bench-$i")
-        var next = lightQueue.poll()
-        while (next != null) {
-          lightResults.add(next._1 -> timedRun(next._1, next._2))
-          next = lightQueue.poll()
-        }
-      }, s"bench-pool-$i")
-      t.start(); t
+    val (lightResults, lightWall) = timed {
+      val lightQueue = new java.util.concurrent.ConcurrentLinkedQueue[(String, Query)]()
+      warm.foreach { case (name, fn, _) => if (!heavyNames(name)) lightQueue.add((name, fn)) }
+      val lightResults = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
+      val workers = (0 until PoolSize).map { i =>
+        val t = new Thread(() => {
+          // own pool per worker — see the prep threads' comment
+          spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"bench-$i")
+          var next = lightQueue.poll()
+          while (next != null) {
+            lightResults.add(next._1 -> timedRun(next._1, next._2))
+            next = lightQueue.poll()
+          }
+        }, s"bench-pool-$i")
+        t.start(); t
+      }
+      workers.foreach(_.join())
+      lightResults
     }
-    workers.foreach(_.join())
-    val lightWall = (System.nanoTime() - lightT0) / 1e9
     compiled += "timed" -> compiles()
     val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
       .find(_.getName == "Metaspace").fold(-1.0)(_.getUsage.getUsed / 1048576.0)

@@ -19,7 +19,7 @@ import graft.operators.FrozenLayout
   *
   *  - '''single build per key''': the builder runs at most once per
   *    (session, dir, kind). `computeIfAbsent` only installs a cheap lazy
-  *    entry, so nested `memo` calls inside a builder (confirmed pairs →
+  *    [[Entry]], so nested `memo` calls inside a builder (confirmed pairs →
   *    candidate pairs → postings) never recursively update the map; the
   *    actual build is serialized by the entry's `lazy val`.
   *  - '''[[replace]] swaps exactly one artifact''': the maintenance path
@@ -38,15 +38,28 @@ import graft.operators.FrozenLayout
   */
 object Caches {
 
-  private final class Entry(build: () => Any, release: Any => Unit) {
-    @volatile private var built: Option[Any] = None
-    lazy val value: Any = { val v = build(); built = Some(v); v }
-    /** Release the value if the lazy build ever ran. */
-    def drop(): Unit = built.foreach(release)
+  /** One lazily built piece of session state and its release — the
+    * holder of every artifact here and of [[FrozenLayout]]'s layouts.
+    * A [[drop]] that lands while the build runs finds nothing to release
+    * yet, so the builder re-checks the evicted flag once done and
+    * releases its own value: nothing it persisted outlives the entry.
+    * Release must be idempotent (both sides may see the other's write).
+    */
+  private[graft] final class Entry[T](build: () => T, release: T => Unit) {
+    @volatile private var built: Option[T] = None
+    @volatile private var evicted = false
+    lazy val value: T = {
+      val v = build()
+      built = Some(v)
+      if (evicted) release(v)
+      v
+    }
+    /** Mark evicted and release the value if (and whenever) it exists. */
+    def drop(): Unit = { evicted = true; built.foreach(release) }
   }
 
   private val entries =
-    new ConcurrentHashMap[(SparkSession, String, String), Entry]()
+    new ConcurrentHashMap[(SparkSession, String, String), Entry[_]]()
   private val hooked =
     java.util.Collections.newSetFromMap(
       new ConcurrentHashMap[SparkSession, java.lang.Boolean]())
@@ -64,12 +77,12 @@ object Caches {
       })
     }
 
-  private def persisted(build: => DataFrame): Entry =
-    new Entry(() => build.persist(StorageLevel.MEMORY_AND_DISK),
-      df => { df.asInstanceOf[DataFrame].unpersist(false); () })
+  private def persisted(build: => DataFrame): Entry[DataFrame] =
+    new Entry[DataFrame](() => build.persist(StorageLevel.MEMORY_AND_DISK),
+      df => { df.unpersist(false); () })
 
   private def lookup(s: SparkSession, dir: String, kind: String,
-      entry: => Entry): Any = {
+      entry: => Entry[_]): Any = {
     hookAppEnd(s)
     entries.computeIfAbsent((s, dir, kind), _ => entry).value
   }
@@ -94,7 +107,7 @@ object Caches {
     */
   def memoSide[T](s: SparkSession, dir: String, kind: String)(
       compute: => T): T =
-    lookup(s, dir, kind, new Entry(() => compute, _ => ())).asInstanceOf[T]
+    lookup(s, dir, kind, new Entry[T](() => compute, _ => ())).asInstanceOf[T]
 
   /** MAINTENANCE path: replace the artifact under (session, dir, kind)
     * with `build` — the in-memory analog of appending a batch to a
@@ -106,7 +119,7 @@ object Caches {
   def replace(s: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame = {
     val entry = persisted(build)
-    val df = entry.value.asInstanceOf[DataFrame]
+    val df = entry.value
     df.count() // materialize from the still-cached predecessor
     Option(entries.put((s, dir, kind), entry)).foreach(_.drop())
     df

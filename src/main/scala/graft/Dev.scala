@@ -61,9 +61,7 @@ object Dev {
       // Execute THIS df's own QueryExecution: count() or a noop write
       // replans into a fresh QueryExecution whose adaptive plan
       // finalizes invisibly, leaving this one at isFinalPlan=false.
-      val t0 = System.nanoTime()
-      df.queryExecution.toRdd.count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (_, dt) = timed(df.queryExecution.toRdd.count())
       val plan = df.queryExecution.executedPlan.toString.trim
       println(f"## $n (run $dt%.2f s)\n\n```\n$plan\n```\n")
     }
@@ -83,9 +81,8 @@ object Dev {
 
   private def artifacts(spark: SparkSession, sfDir: String): Unit = {
     def t(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"PROF $name%-18s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
+      val (n, secs) = timed(f)
+      println(f"PROF $name%-18s $secs%8.2f s  ($n rows)")
     }
     t("scan_only")(Tables.documents(spark, sfDir).count())
     t("shingle_raw")(Fingerprints.shingleIndex(spark, sfDir).count())

@@ -186,9 +186,8 @@ object ScaleStress {
     todo.foreach { case (name, make) =>
       val path = s"$dir/$name.parquet"
       if (stale || !Files.exists(Paths.get(s"$path/_SUCCESS"))) {
-        val t0 = System.nanoTime()
-        make().write.mode("overwrite").parquet(path)
-        println(f"GEN $dir/$name ${(System.nanoTime() - t0) / 1e9}%.1f s")
+        val (_, secs) = timed(make().write.mode("overwrite").parquet(path))
+        println(f"GEN $dir/$name $secs%.1f s")
       }
     }
     Files.createDirectories(Paths.get(dir))
@@ -277,11 +276,10 @@ object ScaleStress {
         SeqMap("name" -> k, "pass" -> ok, "secs" -> tenths(v)) })) + "\n"
 
   private def check(name: String)(body: => Boolean): Unit = {
-    val t0 = System.nanoTime()
-    val (ok, err) =
+    val ((ok, err), secs) = timed {
       try (body, "")
       catch { case e: Throwable => (false, s" ${e.getClass.getSimpleName}: ${e.getMessage}") }
-    val secs = (System.nanoTime() - t0) / 1e9
+    }
     results(name) = (ok, secs)
     println(f"CHECK $name%-28s ${if (ok) "PASS" else "FAIL"} $secs%8.1f s$err")
   }
@@ -395,9 +393,7 @@ object ScaleStress {
     def once(): Double = {
       spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
       Caches.clear(spark)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, d).count()
-      (System.nanoTime() - t0) / 1e9
+      timed(SparkEntry.queries(q)(spark, d).count())._2
     }
     try math.min(once(), once())
     finally spark.conf.set("spark.sql.shuffle.partitions", GateParts.toString)
@@ -417,12 +413,8 @@ object ScaleStress {
       .foreach(e => spark.conf.set(e.key, e.defaultValueString))
   }
 
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("target/scale10")
-    val spark = Session.start(Session.cpus(sys.env))
-    gateConf(spark)
-
-    val t0 = System.nanoTime()
+  /** Generates the fixtures under `dir` and runs every check. */
+  private def runChecks(spark: SparkSession, dir: String): Unit = {
     generate(spark, dir)
 
     // ---- ordinal density: THE FrozenLayout bug class ----
@@ -806,8 +798,13 @@ object ScaleStress {
       }
       Caches.clear(spark)
     }
+  }
 
-    val wall = (System.nanoTime() - t0) / 1e9
+  def main(args: Array[String]): Unit = {
+    val dir = args.headOption.getOrElse("target/scale10")
+    val spark = Session.start(Session.cpus(sys.env))
+    gateConf(spark)
+    val (_, wall) = timed(runChecks(spark, dir))
     val failures = results.count(!_._2._1)
     println(jsonMapper.writeValueAsString(SeqMap(
       "scale_stress" -> dir, "checks" -> results.size, "failures" -> failures,

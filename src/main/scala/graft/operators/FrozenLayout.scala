@@ -51,7 +51,8 @@ import org.apache.spark.sql.functions._
   *  - the memo is LRU-BOUNDED ([[MaxEntries]]): a long-lived interactive
   *    session constructing many distinct frames evicts (and releases)
   *    the least-recently-used layout instead of pinning blocks forever;
-  *  - an eviction racing an in-flight build is closed by the holder: the
+  *  - each layout is a [[graft.Caches.Entry]], so an eviction racing an
+  *    in-flight build is closed the same way as for an artifact: the
   *    builder re-checks the evicted flag after materializing and
   *    releases its own blocks if it lost the race.
   */
@@ -68,29 +69,16 @@ object FrozenLayout {
   // risk collisions = silent wrong layouts; the full plan is structural.
   private type Key = (SparkSession, Any)
 
-  private final class Holder(build: () => DataFrame) {
-    @volatile private var builtOpt: Option[DataFrame] = None
-    @volatile private var evicted = false
-    lazy val df: DataFrame = {
-      val d = build()
-      builtOpt = Some(d)
-      // Eviction may have raced the build: peek() returned None then, so
-      // the evictor could not release — the builder does it itself.
-      if (evicted) release(d)
-      d
-    }
-    /** Mark evicted and release blocks if (and whenever) they exist. */
-    def evict(): Unit = { evicted = true; builtOpt.foreach(release) }
-  }
+  private type Entry = graft.Caches.Entry[DataFrame]
 
   // Access-ordered LRU; ALL map operations synchronize on the map (the
-  // build itself runs outside the lock, serialized by the holder's lazy
+  // build itself runs outside the lock, serialized by the entry's lazy
   // val). removeEldestEntry releases the evictee's blocks.
   private val entries =
-    new java.util.LinkedHashMap[Key, Holder](16, 0.75f, true) {
+    new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[Key, Holder]): Boolean =
-        if (size() > MaxEntries) { e.getValue.evict(); true } else false
+          e: java.util.Map.Entry[Key, Entry]): Boolean =
+        if (size() > MaxEntries) { e.getValue.drop(); true } else false
     }
 
   /** Evict (and release) the layouts of `s`, or of every session. */
@@ -100,7 +88,7 @@ object FrozenLayout {
       while (it.hasNext) {
         val e = it.next()
         if (sOpt.forall(_ eq e.getKey._1)) {
-          e.getValue.evict()
+          e.getValue.drop()
           it.remove()
         }
       }
@@ -126,14 +114,14 @@ object FrozenLayout {
     val ranged = df.repartitionByRange(order: _*)
       .withColumn("__pid", spark_partition_id())
     val key: Key = (s, ranged.queryExecution.analyzed.canonicalized)
-    val holder = entries.synchronized {
-      var h = entries.get(key)
-      if (h == null) {
-        h = new Holder(() => ranged.localCheckpoint())
-        entries.put(key, h)
+    val entry = entries.synchronized {
+      var e = entries.get(key)
+      if (e == null) {
+        e = new Entry(() => ranged.localCheckpoint(), release)
+        entries.put(key, e)
       }
-      h
+      e
     }
-    holder.df
+    entry.value
   }
 }

@@ -9,4 +9,13 @@ package object graft {
     */
   private[graft] val jsonMapper: ObjectMapper =
     JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  /** `body`'s value and its wall-clock seconds: the one stopwatch of
+    * Bench, Dev and ScaleStress.
+    */
+  private[graft] def timed[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val v = body
+    (v, (System.nanoTime() - t0) / 1e9)
+  }
 }

@@ -679,12 +679,7 @@ object CorpusQuality extends QueryModule {
     substringCut(Tables.documents(s, dir))
 
   private[queries] def substringCut(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val runs = dupPositions(docs)
-      .withColumn("brk",
-        when(col("pos") - lag("pos", 1).over(w) <= SpanHashMathW, 0).otherwise(1))
-      .withColumn("isl", sum(col("brk")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val runs = withIslands(dupPositions(docs))
       .groupBy("doc_id", "isl")
       .agg((max(col("pos")) - min(col("pos")) + lit(SpanHashMathW)).as("run_len"))
     val perDoc = runs.groupBy("doc_id").agg(
@@ -698,6 +693,20 @@ object CorpusQuality extends QueryModule {
   }
 
   private def SpanHashMathW: Int = graft.functions.SpanHashMath.W
+
+  /** Numbers each document's islands of (doc_id, pos) positions as
+    * `isl`: windows within W positions overlap, so a gap ≤ W stays in
+    * the island (`brk` marks each island's first position). One window
+    * partitioned by document, no global order.
+    */
+  private def withIslands(dpos: DataFrame): DataFrame = {
+    val w = Window.partitionBy("doc_id").orderBy("pos")
+    dpos
+      .withColumn("brk",
+        when(col("pos") - lag("pos", 1).over(w) <= SpanHashMathW, 0).otherwise(1))
+      .withColumn("isl", sum(col("brk")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
 
   /** Exact-substring dedup, REWRITE endpoint: the cleaned corpus text
     * after cutting every duplicated-window occurrence EXCEPT its
@@ -725,13 +734,6 @@ object CorpusQuality extends QueryModule {
     substringRewrite(Tables.documents(s, dir))
 
   private[queries] def substringRewrite(docs: DataFrame): DataFrame = {
-    val W = SpanHashMathW
-    // pos rides the heavy table as the generator's INT ordinal (guide
-    // §2.3 narrower types — 20 % off the one full-table exchange) and
-    // widens to LONG only after the cut filter shrinks the row set.
-    val ph = docs.select(col("doc_id"),
-        posexplode(spanhashesPos(col("text"))).as(Seq("pos", "h")))
-      .select(col("doc_id"), col("pos"), col("h"))
     // Two-field lexicographic min — Spark structs order field-by-field,
     // so this is exact at ANY document length (no packed-key wrap).
     // "≥2 distinct docs" is min(doc_id) ≠ max(doc_id); min(doc_id) is
@@ -742,21 +744,19 @@ object CorpusQuality extends QueryModule {
     // and no Expand (the r12 count_distinct + min(struct) mix planned
     // one).
     val wh = Window.partitionBy("h")
-    val cut = ph
+    // pos rides the heavy table as the generator's INT ordinal (see
+    // posHashes) and widens to LONG only after the cut filter shrinks
+    // the row set.
+    val cut = posHashes(docs)
       .withColumn("canon", min(struct(col("doc_id"), col("pos"))).over(wh))
       .withColumn("mx", max(col("doc_id")).over(wh))
       .filter(col("canon.doc_id") =!= col("mx"))
       .filter(col("doc_id") =!= col("canon.doc_id")
         || col("pos") =!= col("canon.pos"))
       .select(col("doc_id"), col("pos").cast("long").as("pos"))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val intervals = cut
-      .withColumn("brk",
-        when(col("pos") - lag("pos", 1).over(w) <= W, 0).otherwise(1))
-      .withColumn("isl", sum(col("brk")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val intervals = withIslands(cut)
       .groupBy("doc_id", "isl")
-      .agg(min(col("pos")).as("s"), (max(col("pos")) + lit(W)).as("e"))
+      .agg(min(col("pos")).as("s"), (max(col("pos")) + lit(SpanHashMathW)).as("e"))
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("ivs"))
     docs.join(intervals, Seq("doc_id"), "left")

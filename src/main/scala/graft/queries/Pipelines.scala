@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -124,27 +124,39 @@ object Pipelines extends QueryModule {
 
   private[queries] val SeqTokens = 2048L
 
-  /** Pack documents into fixed-budget training sequences: within each
-    * source, documents in doc_id order are laid end-to-end and a
-    * document belongs to the sequence its first token lands in. One
-    * partitioned window cumsum + one aggregation — no driver loop, and
-    * the window partitions by source so no global sort barrier.
+  /** The token-budget sequence id: (source, doc_id, `carry`…, n_tok,
+    * cum, seq) rows where, within each source, documents in doc_id
+    * order are laid end-to-end and a document belongs to the sequence
+    * its first token lands in. One window cumsum partitioned by source,
+    * so no global sort barrier.
     */
-  def qSeqPack(s: SparkSession, dir: String): DataFrame = {
+  private def withSeq(docs: DataFrame, carry: Column*): DataFrame = {
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.documents(s, dir)
-      .select(col("source"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
+    docs
+      .select((Seq(col("source"), col("doc_id")) ++ carry :+
+        size(split(col("text"), " ")).cast("long").as("n_tok")): _*)
       .withColumn("cum", sum(col("n_tok")).over(w))
       .withColumn("seq",
         floor((col("cum") - col("n_tok")) / lit(SeqTokens.toDouble)).cast("long"))
+  }
+
+  /** One row per packed sequence of `docs`: doc count, token total and
+    * first doc.
+    */
+  private def seqRows(docs: DataFrame): DataFrame =
+    withSeq(docs)
       .groupBy("source", "seq")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("tok_total"),
         min(col("doc_id")).as("first_doc"))
       .orderBy("source", "seq")
-  }
+
+  /** Pack documents into fixed-budget training sequences ([[withSeq]]):
+    * one partitioned window cumsum + one aggregation, no driver loop.
+    */
+  def qSeqPack(s: SparkSession, dir: String): DataFrame =
+    seqRows(Tables.documents(s, dir))
 
   /** Packing-efficiency telemetry over the [[qSeqPack]] layout: per
     * source, sequences used, token total, capacity, and fill fraction —
@@ -154,15 +166,8 @@ object Pipelines extends QueryModule {
     * the packer plus one aggregate; the fill fraction is a double
     * division of exact longs.
     */
-  def qPackEfficiency(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.documents(s, dir)
-      .select(col("source"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .withColumn("cum", sum(col("n_tok")).over(w))
-      .withColumn("seq",
-        floor((col("cum") - col("n_tok")) / lit(SeqTokens.toDouble)).cast("long"))
+  def qPackEfficiency(s: SparkSession, dir: String): DataFrame =
+    withSeq(Tables.documents(s, dir))
       .groupBy("source")
       .agg(countDistinct(col("seq")).as("n_seqs"),
         count(lit(1)).as("n_docs"),
@@ -172,7 +177,6 @@ object Pipelines extends QueryModule {
         (col("tok_total").cast("double") / (col("n_seqs") * lit(SeqTokens)))
           .as("fill_frac"))
       .orderBy("source")
-  }
 
   // ---- training-shard materialization sink ----
 
@@ -186,17 +190,8 @@ object Pipelines extends QueryModule {
   /** Doc-grain packed layout — the [[qSeqPack]] window (per-source
     * cumsum → sequence id), carrying text for the shard payload.
     */
-  private def packedDocs(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.documents(s, dir)
-      .select(col("source"), col("doc_id"), col("text"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .withColumn("cum", sum(col("n_tok")).over(w))
-      .withColumn("seq",
-        floor((col("cum") - col("n_tok")) / lit(SeqTokens.toDouble)).cast("long"))
-      .drop("cum")
-  }
+  private def packedDocs(s: SparkSession, dir: String): DataFrame =
+    withSeq(Tables.documents(s, dir), col("text")).drop("cum")
 
   /** Sequences → shards: global sequence ordinal (via the scalable
     * [[graft.operators.Ordinal]] range-layout machinery — NOT an
@@ -289,24 +284,11 @@ object Pipelines extends QueryModule {
     * corpus beyond what the standalone stage queries already pay.
     */
   def qTrainPrep(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val train = Fingerprints.corpusCleanSurvivors(s, dir)
       .select("doc_id")
       .filter(col("doc_id") >= 20) // eval stand-in docs never train
       .join(Fingerprints.contaminatedDocs(s, dir), Seq("doc_id"), "left_anti")
-    Tables.documents(s, dir)
-      .join(train, Seq("doc_id"), "left_semi")
-      .select(col("source"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .withColumn("cum", sum(col("n_tok")).over(w))
-      .withColumn("seq",
-        floor((col("cum") - col("n_tok")) / lit(SeqTokens.toDouble)).cast("long"))
-      .groupBy("source", "seq")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("tok_total"),
-        min(col("doc_id")).as("first_doc"))
-      .orderBy("source", "seq")
+    seqRows(Tables.documents(s, dir).join(train, Seq("doc_id"), "left_semi"))
   }
 
   // ---- PII redaction ----

@@ -129,6 +129,40 @@ object Similarity extends QueryModule {
   private def qcos(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
+  /** A pair row's exact cosine: query side (qe, qn2), candidate side (ve, vn2). */
+  private def pairCos: Column = qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2"))
+
+  private def querySide(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("qid"), col("qv").as("qe"), col("n2").as("qn2"))
+
+  private def candSide(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("vid"), col("qv").as("ve"), col("n2").as("vn2"))
+
+  /** Brute force: the vectors with vec_id < `nQ` (broadcast) crossed
+    * with every other vector, each pair scored `cos`.
+    */
+  private def bruteScored(emb: DataFrame, nQ: Long): DataFrame =
+    broadcast(querySide(emb.filter(col("vec_id") < nQ))).crossJoin(candSide(emb))
+      .filter(col("qid") =!= col("vid"))
+      .withColumn("cos", pairCos)
+
+  /** Candidate (qid, vid) id pairs with the vectors attached afterwards
+    * by two id equi-joins, so no candidate shuffle carries a vector;
+    * each pair scored `cos`.
+    */
+  private def scoreIdPairs(pairs: DataFrame, emb: DataFrame): DataFrame =
+    pairs.join(querySide(emb), "qid").join(candSide(emb), "vid")
+      .withColumn("cos", pairCos)
+
+  /** Per-qid top-`k` of scored (qid, vid, cos) rows: cos descending, vid
+    * ascending on ties, numbered `rank` from 1.
+    */
+  private def topByCos(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
+      .filter(col("rank") <= k)
+      .select("qid", "vid", "cos", "rank")
+
   /** Deterministic ±1 hyperplane component for plane j, dim i — computed
     * at PLAN BUILD time in Scala and embedded as array literals in both
     * the Spark plan and the DuckDB oracle, so cross-engine agreement is
@@ -167,20 +201,8 @@ object Similarity extends QueryModule {
   /** Brute-force cosine top-10 for query vectors vec_id < 5. The query
     * side is broadcast; ranking is a per-query-partitioned window.
     */
-  def qEmbedKnn(s: SparkSession, dir: String): DataFrame = {
-    val emb = quantized(s, dir)
-    val q = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"), col("n2").as("qn2"))
-    val cos = broadcast(q).crossJoin(emb.select(col("vec_id").as("vid"),
-        col("qv").as("ve"), col("n2").as("vn2")))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cos", qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)
-    cos.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
-      .select("qid", "vid", "cos", "rank")
-      .orderBy("qid", "rank")
-  }
+  def qEmbedKnn(s: SparkSession, dir: String): DataFrame =
+    topByCos(bruteScored(quantized(s, dir), 5L), 10).orderBy("qid", "rank")
 
   /** One (vec_id, qv, n2, band, bkt) row per vector per band: sign-bit
     * buckets from the fixed hyperplanes, codegen'd integer dots.
@@ -229,16 +251,7 @@ object Similarity extends QueryModule {
       // a pair matching several bands carries identical payloads — one
       // row per (qid, vid) survives, the dot computed once
       .dropDuplicates("qid", "vid")
-      .join(emb.select(col("vec_id").as("qid"), col("qv").as("qe"),
-        col("n2").as("qn2")), "qid")
-      .join(emb.select(col("vec_id").as("vid"), col("qv").as("ve"),
-        col("n2").as("vn2")), "vid")
-      .withColumn("cos", qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("qid", "vid", "cos", "rank")
-      .orderBy("qid", "rank")
+    topByCos(scoreIdPairs(cand, emb), 5).orderBy("qid", "rank")
   }
 
   /** IVF-Flat coarse quantizer geometry: [[IvfK]] centroid lists, each
@@ -253,6 +266,21 @@ object Similarity extends QueryModule {
   private val IvfK = 16
   private val IvfProbe = 4
 
+  /** Every vector crossed with the broadcast seed centroids (vec_id <
+    * [[IvfK]]) as (cid, cv, cn2) rows scored `ccos` — the assignment
+    * input of IVF, k-means, semantic dedup and cluster balance.
+    */
+  private def seedScored(emb: DataFrame): DataFrame = {
+    val cents = emb.filter(col("vec_id") < IvfK)
+      .select(col("vec_id").as("cid"), col("qv").as("cv"), col("n2").as("cn2"))
+    emb.crossJoin(broadcast(cents))
+      .withColumn("ccos", qcos(G.dotl(col("qv"), col("cv")), col("n2"), col("cn2")))
+  }
+
+  /** `payload` of the nearest seed: max ccos, min cid on ties. */
+  private def nearestSeed(payload: Column): Column =
+    max_by(payload, struct(col("ccos"), (-col("cid")).as("tb")))
+
   /** IVF-Flat ANN: assign every vector to its max-cosine centroid
     * (broadcast argmax as a `max_by` HASH AGGREGATE — the K centroid
     * rows per vector collapse map-side before any shuffle, no
@@ -261,17 +289,12 @@ object Similarity extends QueryModule {
     * candidates, top-5.
     */
   def qEmbedIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = quantized(s, dir)
-    val cents = emb.filter(col("vec_id") < IvfK)
-      .select(col("vec_id").as("cid"), col("qv").as("cv"), col("n2").as("cn2"))
-    val scored = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", qcos(G.dotl(col("qv"), col("cv")), col("n2"), col("cn2")))
+    val scored = seedScored(quantized(s, dir))
     // argmax with a total order (max cos, min cid tie-break): map-side
     // partials shrink K rows/vector to 1 — measurably less shuffle than
     // a row_number window at 10^9 vectors, same result
     val ivf = scored.groupBy("vec_id")
-      .agg(max_by(struct(col("cid"), col("qv"), col("n2")),
-        struct(col("ccos"), (-col("cid")).as("tb"))).as("best"))
+      .agg(nearestSeed(struct(col("cid"), col("qv"), col("n2"))).as("best"))
       .select(col("best.cid").as("cid"), col("vec_id").as("vid"),
         col("best.qv").as("ve"), col("best.n2").as("vn2"))
     // probe lists for the 5 queries: top-IvfProbe centroids per query
@@ -285,12 +308,8 @@ object Similarity extends QueryModule {
         explode(col("top.cid")).as("cid"))
     val cand = broadcast(probes).join(ivf, Seq("cid"))
       .filter(col("qid") =!= col("vid"))
-      .withColumn("cos", qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("qid", "vid", "cos", "rank")
-      .orderBy("qid", "rank")
+      .withColumn("cos", pairCos)
+    topByCos(cand, 5).orderBy("qid", "rank")
   }
 
   /** One Lloyd iteration of k-means over the corpus vectors, seeded
@@ -304,25 +323,18 @@ object Similarity extends QueryModule {
     * K×dims-bounded per round at any scale. Numerics exact: sums of
     * 2^20-quantized longs, one double division at the end.
     */
-  def qKmeansIter(s: SparkSession, dir: String): DataFrame = {
-    val emb = quantized(s, dir)
-    val cents = emb.filter(col("vec_id") < IvfK)
-      .select(col("vec_id").as("cid"), col("qv").as("cv"), col("n2").as("cn2"))
-    val scored = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", qcos(G.dotl(col("qv"), col("cv")), col("n2"), col("cn2")))
+  def qKmeansIter(s: SparkSession, dir: String): DataFrame =
     // same max_by hash-agg argmax as the IVF assignment: partial
     // aggregation collapses the K candidate rows per vector map-side,
     // no per-vector sort window in the plan
-    scored.groupBy("vec_id")
-      .agg(max_by(struct(col("cid"), col("qv")),
-        struct(col("ccos"), (-col("cid")).as("tb"))).as("best"))
+    seedScored(quantized(s, dir)).groupBy("vec_id")
+      .agg(nearestSeed(struct(col("cid"), col("qv"))).as("best"))
       .select(col("best.cid").as("cid"), posexplode(col("best.qv")).as(Seq("pos", "q")))
       .groupBy("cid", "pos")
       .agg(count(lit(1)).as("n_members"),
         (sum(col("q")).cast("double") / (count(lit(1)) * lit(1048576.0)))
           .as("centroid"))
       .orderBy("cid", "pos")
-  }
 
   /** Top-[[GraphK]] cosine neighbor graph over ALL vectors — the input
     * to semantic dedup / clustering (vs [[qEmbedAnn]], which ranks for
@@ -356,12 +368,10 @@ object Similarity extends QueryModule {
         col("n2").as("vn2"), col("band"), col("bkt")),
         Seq("band", "bkt"))
       .filter(col("qid") =!= col("vid"))
-      .withColumn("cos", qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2")))
+      .withColumn("cos", pairCos)
       .select("qid", "vid", "cos")
       .dropDuplicates("qid", "vid")
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= GraphK)
+    topByCos(cand, GraphK)
   }
 
   def qKnnGraph(s: SparkSession, dir: String): DataFrame =
@@ -863,14 +873,9 @@ object Similarity extends QueryModule {
     * verdict — the full assignment table a production pass writes.
     */
   def qDedupSemantic(s: SparkSession, dir: String): DataFrame = {
-    val emb = quantized(s, dir)
-    val cents = emb.filter(col("vec_id") < IvfK)
-      .select(col("vec_id").as("cid"), col("qv").as("cv"), col("n2").as("cn2"))
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", qcos(G.dotl(col("qv"), col("cv")), col("n2"), col("cn2")))
+    val assigned = seedScored(quantized(s, dir))
       .groupBy("vec_id")
-      .agg(max_by(struct(col("cid"), col("ccos"), col("qv"), col("n2")),
-        struct(col("ccos"), (-col("cid")).as("tb"))).as("best"))
+      .agg(nearestSeed(struct(col("cid"), col("ccos"), col("qv"), col("n2"))).as("best"))
       .select(col("vec_id"), col("best.cid").as("cid"),
         col("best.ccos").as("ccos"), col("best.qv").as("qv"), col("best.n2").as("n2"))
     // within-cluster near-dup pairs, both orientations: for each member
@@ -913,13 +918,9 @@ object Similarity extends QueryModule {
     * pre-cap size for telemetry.
     */
   def qClusterBalance(s: SparkSession, dir: String): DataFrame = {
-    val emb = quantized(s, dir)
-    val cents = emb.filter(col("vec_id") < IvfK)
-      .select(col("vec_id").as("cid"), col("qv").as("cv"), col("n2").as("cn2"))
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("ccos", qcos(G.dotl(col("qv"), col("cv")), col("n2"), col("cn2")))
+    val assigned = seedScored(quantized(s, dir))
       .groupBy("vec_id")
-      .agg(max_by(col("cid"), struct(col("ccos"), (-col("cid")).as("tb"))).as("cid"))
+      .agg(nearestSeed(col("cid")).as("cid"))
       .withColumn("bkt", expr(
         "CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 15), 16, 10) AS BIGINT) % 1000000"))
     val w = Window.partitionBy("cid").orderBy(col("bkt"), col("vec_id"))
@@ -1139,16 +1140,7 @@ object Similarity extends QueryModule {
     val emb = quantized(s, dir)
     val cand = batch.join(standing, Seq("band", "bkt"))
       .select("qid", "vid").dropDuplicates("qid", "vid")
-      .join(emb.select(col("vec_id").as("qid"), col("qv").as("qe"),
-        col("n2").as("qn2")), "qid")
-      .join(emb.select(col("vec_id").as("vid"), col("qv").as("ve"),
-        col("n2").as("vn2")), "vid")
-      .withColumn("cos", qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= GraphK)
-      .select("qid", "vid", "cos", "rank")
-      .orderBy("qid", "rank")
+    topByCos(scoreIdPairs(cand, emb), GraphK).orderBy("qid", "rank")
   }
 
   // ---- budgeted MULTI-PROBE ANN ----
@@ -1234,16 +1226,8 @@ object Similarity extends QueryModule {
         Window.partitionBy("qid", "band")
           .orderBy(col("probe").asc, col("vid").asc)))
       .filter(col("adm") <= MpBudget)
-    val cand = admitted.select("qid", "vid").dropDuplicates("qid", "vid")
-      .join(emb.select(col("vec_id").as("qid"), col("qv").as("qe"),
-        col("n2").as("qn2")), "qid")
-      .join(emb.select(col("vec_id").as("vid"), col("qv").as("ve"),
-        col("n2").as("vn2")), "vid")
-      .withColumn("cos", qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("qid", "vid", "cos", "rank")
+    topByCos(scoreIdPairs(admitted.select("qid", "vid").dropDuplicates("qid", "vid"), emb),
+      topK)
   }
 
   /** Budgeted multi-probe ANN, driver-checked: top-5 standing neighbors
@@ -1264,18 +1248,7 @@ object Similarity extends QueryModule {
     */
   private[graft] def multiProbeRecallProfile(s: SparkSession, dir: String,
       nQ: Long, topK: Int): (Double, Double, Long) = {
-    val emb = quantized(s, dir)
-    val q = emb.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"), col("n2").as("qn2"))
-    val truth = broadcast(q)
-      .crossJoin(emb.select(col("vec_id").as("vid"), col("qv").as("ve"),
-        col("n2").as("vn2")))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cos", qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .filter(col("rank") <= topK)
-      .select("qid", "vid")
+    val truth = topByCos(bruteScored(quantized(s, dir), nQ), topK).select("qid", "vid")
     val nTruth = truth.count().toDouble
     def recallOf(leg: DataFrame): Double =
       truth.join(leg.select("qid", "vid"), Seq("qid", "vid"), "left_semi")
@@ -1313,15 +1286,7 @@ object Similarity extends QueryModule {
         .select(col("vec_id").as("qid"), col("band"), col("bkt"))
       val cand = batch.join(st, Seq("band", "bkt"))
         .select("qid", "vid").dropDuplicates("qid", "vid")
-        .join(emb.select(col("vec_id").as("qid"), col("qv").as("qe"),
-          col("n2").as("qn2")), "qid")
-        .join(emb.select(col("vec_id").as("vid"), col("qv").as("ve"),
-          col("n2").as("vn2")), "vid")
-        .withColumn("cos", qcos(G.dotl(col("qe"), col("ve")), col("qn2"), col("vn2")))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)
-      cand.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= GraphK)
-        .select("qid", "vid", "cos", "rank")
+      topByCos(scoreIdPairs(cand, emb), GraphK)
     }
     val chained = bands.filter(col("vec_id") < s1)
       .unionByName(bands.filter(col("vec_id") >= s1 && col("vec_id") < s2))

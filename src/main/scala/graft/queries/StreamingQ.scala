@@ -169,8 +169,13 @@ object StreamingQ extends QueryModule {
     * batches becoming visible — breaks a count or the checksum.
     */
   def qStreamShardSink(s: SparkSession, dir: String): DataFrame =
-    shardSink(s, dir)
-      .groupBy("source").agg(
+    sourceManifest(shardSink(s, dir))
+
+  /** The per-source manifest of a documents frame: doc count, char
+    * total and order-independent md5 checksum.
+    */
+  private def sourceManifest(docs: DataFrame): DataFrame =
+    docs.groupBy("source").agg(
         count(lit(1)).as("n_docs"),
         sum(length(col("text")).cast("long")).as("n_chars"),
         Q.checksum("text").as("checksum"))
@@ -362,19 +367,14 @@ object StreamingQ extends QueryModule {
     * file count.
     */
   def qSinkCompaction(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.memoSide(s, dir, "sink_compacted") {
+    sourceManifest(graft.Caches.memoSide(s, dir, "sink_compacted") {
       val sunk = shardSink(s, dir)
       // Session-scoped scratch: the dir goes with this side value on
       // Caches.clear, not parked until JVM exit.
       val out = graft.Scratch.dirFor(s, "compact")
       graft.sources.Io.compactedParquet(sunk, s"$out/data", "doc_id", 4)
       s.read.parquet(s"$out/data")
-    }
-      .groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum(length(col("text")).cast("long")).as("n_chars"),
-        Q.checksum("text").as("checksum"))
-      .orderBy("source")
+    })
 
   override def prewarm(s: SparkSession, dir: String): Unit = {
     // these drains are independent of every other artifact — they run

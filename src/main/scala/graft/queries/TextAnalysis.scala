@@ -480,11 +480,12 @@ object TextAnalysis extends QueryModule {
     *
     * Scale shape: the query-term IN-list filters the exploded tokens
     * BEFORE any shuffle (only query-term occurrences leave the scan —
-    * shuffle ∝ hits, not corpus); df is a |query|-row aggregate
-    * broadcast back; N/TL one scalar row cross-joined; per-doc lengths
-    * are map-only; top-k is TakeOrderedAndProject. A standing inverted
-    * index (the posting-artifact pattern) replaces the token scan when
-    * the query rate amortizes the build — same plan from the join on.
+    * shuffle ∝ hits, not corpus); df is a window count over tf; the
+    * query-term table and the N/TL scalar row are broadcast; per-doc
+    * lengths are map-only; top-k is TakeOrderedAndProject. A standing
+    * inverted index (the posting-artifact pattern) replaces the token
+    * scan when the query rate amortizes the build — same plan from the
+    * join on.
     */
   def qBm25Search(s: SparkSession, dir: String): DataFrame =
     bm25Scores(s, dir)
@@ -492,15 +493,31 @@ object TextAnalysis extends QueryModule {
       .limit(Bm25TopK)
 
   /** The full BM25 score table (doc_id, n_hit, score) for [[Bm25Terms]]
-    * — shared by the plain ranking and the hybrid-retrieval rerank.
+    * — shared by the plain ranking and the hybrid-retrieval rerank. It
+    * is the multi-query pipeline restricted to query 0.
     */
-  private[queries] def bm25Scores(s: SparkSession, dir: String): DataFrame = {
+  private[queries] def bm25Scores(s: SparkSession, dir: String): DataFrame =
+    bm25ByQuery(s, dir, MultiQueries.take(1)).select("doc_id", "n_hit", "score")
+
+  /** The BM25 score table (query_id, doc_id, n_hit, score) of a query
+    * workload in ONE corpus pass: the query table broadcasts, the token
+    * scan filters to the union of all query terms before any shuffle
+    * (shuffle ∝ hits, never corpus), and tf/df compute once per distinct
+    * term and fan out to queries through the broadcast join.
+    */
+  private def bm25ByQuery(s: SparkSession, dir: String,
+      queries: Seq[(Int, Seq[String])]): DataFrame = {
+    import s.implicits._
     val docs = Tables.documents(s, dir)
     val lens = docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("dl"))
+    val qterms = queries
+      .flatMap { case (q, ts) => ts.map(t => (q.toLong, t)) }
+      .toDF("query_id", "term")
+    val allTerms = queries.flatMap(_._2).distinct
     val hits = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term").isin(Bm25Terms: _*))
+      .filter(col("term").isin(allTerms: _*))
     val tf = hits.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     // df DERIVES from tf — one row per distinct (doc, term) by
     // construction, so a per-term row count over tf ≡ the old
@@ -514,54 +531,28 @@ object TextAnalysis extends QueryModule {
     val withDf = tf.withColumn("df",
       count(lit(1)).over(Window.partitionBy("term")))
     val tot = lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tl"))
-    withDf
-      .join(lens, "doc_id")
-      .crossJoin(broadcast(tot))
-      .withColumn("s_micro", expr(microScore("DIV", "DECIMAL(38,0)")))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hit"), sum(col("s_micro")).as("score"))
-  }
-
-  /** PARAMETERIZED multi-query BM25 — [[qBm25Search]] generalized from
-    * one fixed term list to an N-query workload in ONE corpus pass: the
-    * [[MultiQueries]] table broadcasts (queries are metadata-sized by
-    * contract), the token scan filters to the UNION of all query terms
-    * before any shuffle (shuffle ∝ hits, never corpus), tf/df compute
-    * once per distinct term and fan out to queries through the
-    * broadcast join, and per-query top-k is one window partitioned by
-    * query_id. Adding a query adds broadcast rows, not corpus passes —
-    * the shape that serves a whole eval-suite's retrieval queries at
-    * 100 TB for the cost of one scan. Scoring is the same exact-integer
-    * micro-score, so per-query rankings replay bit-for-bit (query 0 ≡
-    * q_bm25_search's ranking by construction).
-    */
-  def qBm25Multi(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val docs = Tables.documents(s, dir)
-    val lens = docs.select(col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("dl"))
-    val qterms = MultiQueries
-      .flatMap { case (q, ts) => ts.map(t => (q.toLong, t)) }
-      .toDF("query_id", "term")
-    val allTerms = MultiQueries.flatMap(_._2).distinct
-    val hits = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term").isin(allTerms: _*))
-    val tf = hits.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // df from tf as an unbounded window count (see bm25Scores): same
-    // counts, one corpus scan + explode instead of two, no join-back.
-    val withDf = tf.withColumn("df",
-      count(lit(1)).over(Window.partitionBy("term")))
-    val tot = lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tl"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"))
     withDf.join(broadcast(qterms), "term")
       .join(lens, "doc_id")
       .crossJoin(broadcast(tot))
       .withColumn("s_micro", expr(microScore("DIV", "DECIMAL(38,0)")))
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("n_hit"), sum(col("s_micro")).as("score"))
+  }
+
+  /** PARAMETERIZED multi-query BM25 — [[qBm25Search]] generalized from
+    * one fixed term list to an N-query workload in ONE corpus pass
+    * ([[bm25ByQuery]] over the [[MultiQueries]] table, which is
+    * metadata-sized by contract), and per-query top-k is one window
+    * partitioned by query_id. Adding a query adds broadcast rows, not
+    * corpus passes — the shape that serves a whole eval-suite's
+    * retrieval queries at 100 TB for the cost of one scan. Scoring is
+    * the same exact-integer micro-score, so per-query rankings replay
+    * bit-for-bit (query 0 ≡ q_bm25_search's ranking by construction).
+    */
+  def qBm25Multi(s: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("score").desc, col("doc_id"))
+    bm25ByQuery(s, dir, MultiQueries)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= Bm25TopK)
       .select("query_id", "doc_id", "n_hit", "score", "rank")

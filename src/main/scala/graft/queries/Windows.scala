@@ -190,20 +190,30 @@ object Windows extends QueryModule {
       .orderBy("event_id")
   }
 
-  /** As-of join (see [[graft.operators.AsOfJoin]]): for every click,
-    * the user's most recent view at-or-before it — trades⋈quotes shape
-    * on the events table. Oracle is DuckDB's native ASOF LEFT JOIN.
+  /** Clicks as-of joined to the same user's views, with the output
+    * shared by the five as-of queries; the `asOf` options (direction,
+    * exact matches, staleness bound) are the one thing they vary.
     */
-  def qAsofJoin(s: SparkSession, dir: String): DataFrame = {
+  private def clickViewAsOf(s: SparkSession, dir: String,
+      toleranceUs: Long = -1L, direction: String = "backward",
+      allowExactMatches: Boolean = true): DataFrame = {
     val clicks = ev(s, dir).filter(col("event_type") === "click")
       .select(col("event_id"), col("user_id"), col("ts"), col("value").as("click_value"))
     val views = ev(s, dir).filter(col("event_type") === "view")
       .select(col("user_id"), col("ts"), col("value").as("view_value"))
     graft.operators.AsOfJoin.asOf(
-        clicks, views, Seq("user_id"), "ts", Seq("view_value"), rightTsAs = "view_ts")
+        clicks, views, Seq("user_id"), "ts", Seq("view_value"), rightTsAs = "view_ts",
+        toleranceUs = toleranceUs, direction = direction,
+        allowExactMatches = allowExactMatches)
       .select("event_id", "user_id", "ts", "click_value", "view_value", "view_ts")
       .orderBy("event_id")
   }
+
+  /** As-of join (see [[graft.operators.AsOfJoin]]): for every click,
+    * the user's most recent view at-or-before it — trades⋈quotes shape
+    * on the events table. Oracle is DuckDB's native ASOF LEFT JOIN.
+    */
+  def qAsofJoin(s: SparkSession, dir: String): DataFrame = clickViewAsOf(s, dir)
 
   /** Forward as-of join (pandas merge_asof direction='forward'): for
     * every click, the user's EARLIEST view at-or-after it — the
@@ -211,17 +221,8 @@ object Windows extends QueryModule {
     * [[qAsofJoin]] traversed in descending time order; oracle is
     * DuckDB's native ASOF with the inequality flipped.
     */
-  def qAsofForward(s: SparkSession, dir: String): DataFrame = {
-    val clicks = ev(s, dir).filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value").as("click_value"))
-    val views = ev(s, dir).filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), col("value").as("view_value"))
-    graft.operators.AsOfJoin.asOf(
-        clicks, views, Seq("user_id"), "ts", Seq("view_value"),
-        rightTsAs = "view_ts", direction = "forward")
-      .select("event_id", "user_id", "ts", "click_value", "view_value", "view_ts")
-      .orderBy("event_id")
-  }
+  def qAsofForward(s: SparkSession, dir: String): DataFrame =
+    clickViewAsOf(s, dir, direction = "forward")
 
   /** Nearest as-of join (pandas merge_asof direction='nearest'):
     * whichever of the at-or-before / at-or-after views is closer in
@@ -229,34 +230,16 @@ object Windows extends QueryModule {
     * windows share the keyed partitioning. Oracle composes two native
     * DuckDB ASOF joins and picks by gap with the same tie rule.
     */
-  def qAsofNearest(s: SparkSession, dir: String): DataFrame = {
-    val clicks = ev(s, dir).filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value").as("click_value"))
-    val views = ev(s, dir).filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), col("value").as("view_value"))
-    graft.operators.AsOfJoin.asOf(
-        clicks, views, Seq("user_id"), "ts", Seq("view_value"),
-        rightTsAs = "view_ts", direction = "nearest")
-      .select("event_id", "user_id", "ts", "click_value", "view_value", "view_ts")
-      .orderBy("event_id")
-  }
+  def qAsofNearest(s: SparkSession, dir: String): DataFrame =
+    clickViewAsOf(s, dir, direction = "nearest")
 
   /** Strict as-of join (pandas allow_exact_matches=False): a view AT
     * the click instant does not match — only strictly-before ones.
     * Implemented by flipping the side order at equal timestamps; the
     * oracle is DuckDB's native ASOF with `<`.
     */
-  def qAsofStrict(s: SparkSession, dir: String): DataFrame = {
-    val clicks = ev(s, dir).filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value").as("click_value"))
-    val views = ev(s, dir).filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), col("value").as("view_value"))
-    graft.operators.AsOfJoin.asOf(
-        clicks, views, Seq("user_id"), "ts", Seq("view_value"),
-        rightTsAs = "view_ts", allowExactMatches = false)
-      .select("event_id", "user_id", "ts", "click_value", "view_value", "view_ts")
-      .orderBy("event_id")
-  }
+  def qAsofStrict(s: SparkSession, dir: String): DataFrame =
+    clickViewAsOf(s, dir, allowExactMatches = false)
 
   /** Bounded-staleness as-of tolerance (pandas merge_asof `tolerance`):
     * a view older than this is no match. 30 min suits the testdata's
@@ -270,17 +253,8 @@ object Windows extends QueryModule {
     * applies. Same one-shuffle plan; the bound is a post-predicate on
     * the carried match timestamp.
     */
-  def qAsofTolerance(s: SparkSession, dir: String): DataFrame = {
-    val clicks = ev(s, dir).filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value").as("click_value"))
-    val views = ev(s, dir).filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), col("value").as("view_value"))
-    graft.operators.AsOfJoin.asOf(
-        clicks, views, Seq("user_id"), "ts", Seq("view_value"),
-        rightTsAs = "view_ts", toleranceUs = AsofTolUs)
-      .select("event_id", "user_id", "ts", "click_value", "view_value", "view_ts")
-      .orderBy("event_id")
-  }
+  def qAsofTolerance(s: SparkSession, dir: String): DataFrame =
+    clickViewAsOf(s, dir, toleranceUs = AsofTolUs)
 
   /** Session gap: a new session starts after this much user inactivity.
     * (6 h suits the testdata's per-user event cadence; production tunes
