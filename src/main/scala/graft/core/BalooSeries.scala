@@ -208,16 +208,15 @@ final class BalooSeries(val df: DataFrame, val indexCols: Seq[String], val name:
 
   /** The one plan of [[shift]], [[diff]] and [[pctChange]]: `out(x,
     * prev)` per row, where `prev` is the value n positions earlier.
-    * Spelled as ordinal + equi self-join on `ord − n`: both sides
-    * shuffle on the ordinal (an equi hash join any cluster handles),
-    * instead of a global-order window.
+    * Spelled as ordinal + equi self-join on `ord − n`
+    * ([[graft.operators.Scan.shiftJoin]]), instead of a global-order
+    * window.
     */
   private def lagged(op: String, n: Long)(out: (Column, Column) => Column): BalooSeries = {
     require(indexCols.nonEmpty, s"$op requires an index order")
     val ord = graft.operators.Ordinal.withOrdinal(df, indexCols.map(col), "__ord")
-    val donor = ord.select((col("__ord") + n).as("__ord"), col(name).as("__prev"))
     new BalooSeries(
-      ord.join(donor, Seq("__ord"), "left")
+      graft.operators.Scan.shiftJoin(ord, ord, "__ord", n, col(name).as("__prev"))
         .select(indexCols.map(col) :+ out(col(name), col("__prev")).as(name): _*),
       indexCols, name)
   }
@@ -304,23 +303,18 @@ final class BalooSeries(val df: DataFrame, val indexCols: Seq[String], val name:
 
 /** Rolling aggregates over a global order — the op Spark's window can
   * only express by collapsing to one partition. Two distributed
-  * spellings instead:
+  * spellings instead, both from [[graft.operators.Scan]]:
   *
   *   - sum/mean: PREFIX DIFFERENCE — rolling_sum(i) = P(i) − P(i−n)
-  *     where P is the inclusive running sum from the two-phase scan
-  *     ([[graft.operators.Scan]]); the lagged prefix arrives by an equi
-  *     self-join on the running row count. Exact (decimal-carried), two
-  *     exchanges total, independent of n.
+  *     where P is the inclusive running sum from the two-phase scan;
+  *     the lagged prefix arrives by an equi self-join on the running
+  *     row count ([[graft.operators.Scan.shiftJoin]]). Exact
+  *     (decimal-carried), two exchanges total, independent of n.
   *   - min/max: prefix difference doesn't invert, so the BLOCK
-  *     DECOMPOSITION (the classic sliding-extremum two-scan trick, van
-  *     Herk/Gil–Werman shape): cut the ordinal into blocks of size n —
-  *     any trailing window of n rows spans at most two blocks, so
-  *     rolling_ext(i) = ext( prefix-ext within i's block up to i,
-  *     suffix-ext of the PREVIOUS block from position i−n+1 ). Both
-  *     scans are windows KEYED by block id (never SinglePartition), the
-  *     cross-block half arrives by one equi self-join on the ordinal —
-  *     zero replication, cost independent of n (the round-6 spelling
-  *     donated each row n-fold through `explode(sequence)`).
+  *     DECOMPOSITION over the ordinal
+  *     ([[graft.operators.Scan.blockExtremes]]) — zero replication,
+  *     cost independent of n (the round-6 spelling donated each row
+  *     n-fold through `explode(sequence)`).
   */
 final class BalooRolling(s: BalooSeries, n: Int) {
   require(n >= 1, "window must be at least 1")
@@ -330,9 +324,7 @@ final class BalooRolling(s: BalooSeries, n: Int) {
     val base = graft.operators.Scan.runningAggs(s.df, idx, Seq(
       (s.col_.cast("decimal(28,4)"), "sum", "__psum"),
       (lit(1L), "sum", "__rn")))
-    val donor = base.select((col("__rn") + n).as("__rn"),
-      col("__psum").as("__plag"))
-    base.join(donor, Seq("__rn"), "left")
+    graft.operators.Scan.shiftJoin(base, base, "__rn", n, col("__psum").as("__plag"))
       .withColumn("__rsum", when(col("__rn") >= n,
         col("__psum") - coalesce(col("__plag"), lit(0))))
   }
@@ -344,41 +336,15 @@ final class BalooRolling(s: BalooSeries, n: Int) {
       (col("__rsum").cast("double") / lit(n)).as(s.name): _*),
     s.indexCols, s.name)
 
-  private def extremeFrame(how: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val f: Column => Column =
-      if (how == "max") org.apache.spark.sql.functions.max(_)
-      else org.apache.spark.sql.functions.min(_)
-    val comb: (Column, Column) => Column =
-      if (how == "max") greatest(_, _) else least(_, _)
+  private def extreme(how: String): BalooSeries = {
     val ord = graft.operators.Ordinal.withOrdinal(s.df, idx, "__ord")
-      .withColumn("__blk", expr(s"__ord DIV $n"))
-    val wPre = Window.partitionBy("__blk").orderBy(col("__ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wSuf = Window.partitionBy("__blk").orderBy(col("__ord").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // one exchange on the block id, two partition-local sorts
-    val scanned = ord
-      .withColumn("__pre", f(s.col_).over(wPre))
-      .withColumn("__suf", f(s.col_).over(wSuf))
-    // row i needs the previous block's suffix-ext FROM position i−n+1:
-    // that row donates its __suf to ordinal i = (i−n+1) + (n−1)
-    val donor = scanned.select(
-      (col("__ord") + (n - 1).toLong).as("__ord"), col("__suf").as("__xsuf"))
-    scanned.join(donor, Seq("__ord"), "left")
-      .withColumn("__ext",
-        // p = n−1 ⇒ the window IS the block: prefix alone (the donor row
-        // would be i−n+1 from the SAME block — wrong half, exclude it)
-        when(col("__ord") % n === (n - 1).toLong, col("__pre"))
-          .otherwise(comb(col("__pre"), col("__xsuf"))))
-      .withColumn("__r", when(col("__ord") >= (n - 1).toLong, col("__ext")))
+    new BalooSeries(
+      graft.operators.Scan.blockExtremes(ord, "__ord", 0, n, Seq((s.col_, how, "__ext")))
+        .select(idx :+ when(col("__ord") >= (n - 1).toLong, col("__ext")).as(s.name): _*),
+      s.indexCols, s.name)
   }
-  def min(): BalooSeries = new BalooSeries(
-    extremeFrame("min")
-      .select(idx :+ col("__r").as(s.name): _*), s.indexCols, s.name)
-  def max(): BalooSeries = new BalooSeries(
-    extremeFrame("max")
-      .select(idx :+ col("__r").as(s.name): _*), s.indexCols, s.name)
+  def min(): BalooSeries = extreme("min")
+  def max(): BalooSeries = extreme("max")
 }
 
 /** The `.str` accessor — the reference's 11 byte-string ops

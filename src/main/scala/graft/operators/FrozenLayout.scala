@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** Frozen range layouts for the prefix-scan machinery ([[Ordinal]],
-  * [[Scan]]) — one materialized `repartitionByRange` per distinct
-  * (session, input plan, order), shared by every consumer.
+/** Frozen range layouts for the prefix-scan machinery ([[Scan]], and
+  * through it [[Ordinal]]) — one materialized `repartitionByRange` per
+  * distinct (session, input plan, order), shared by every consumer.
   *
   * Why freezing is needed at all: the scan layout is consumed TWICE
   * (per-partition offsets aggregate + the windowed main branch), and

@@ -395,14 +395,6 @@ object PandasExt extends QueryModule {
         col("__rmin").as("run_min"))
       .orderBy("o_orderkey")
 
-  /** `shift`/`diff`/`pct_change` — positional lag under the GLOBAL
-    * index order, spelled as ordinal + equi self-join on `ord − 1`
-    * (hash join on the ordinal; no global-order window). All three
-    * outputs derive from the SAME lagged value, so the fused plan is
-    * ONE ordinal build and ONE donor join — the production spelling;
-    * the per-verb Series API (`shift`/`diff`/`pctChange`, same shape
-    * each) is exercised by BalooSeriesSpec.
-    */
   /** pandas `Series.ewm(alpha=0.5, adjust=True).mean()`, truncated at
     * [[EwmK]] lags — per-user over the event stream order (ts,
     * event_id). Exactness discipline: with α = 1/2 the adjust-mode
@@ -482,13 +474,19 @@ object PandasExt extends QueryModule {
       .orderBy("event_id")
   }
 
+  /** `shift`/`diff`/`pct_change` — positional lag under the GLOBAL
+    * index order, spelled as ordinal + equi self-join on `ord − 1`
+    * ([[graft.operators.Scan.shiftJoin]]; no global-order window). All
+    * three outputs derive from the SAME lagged value, so the fused plan
+    * is ONE ordinal build and ONE donor join; the per-verb Series API
+    * (`shift`/`diff`/`pctChange`) builds the same shape once per verb,
+    * and GlobalOrderSpec pins both to the same values.
+    */
   def qShiftDiff(s: SparkSession, dir: String): DataFrame = {
     val ord = graft.operators.Ordinal.withOrdinal(
       Tables.orders(s, dir).select("o_orderkey", "o_totalprice"),
       Seq(col("o_orderkey")), "__ord")
-    val donor = ord.select((col("__ord") + 1).as("__ord"),
-      col("o_totalprice").as("__prev"))
-    ord.join(donor, Seq("__ord"), "left")
+    graft.operators.Scan.shiftJoin(ord, ord, "__ord", 1, col("o_totalprice").as("__prev"))
       .select(
         col("o_orderkey"), col("o_totalprice"),
         col("__prev").as("shifted"),
@@ -502,43 +500,24 @@ object PandasExt extends QueryModule {
     * pandas `rolling(7)` (min_periods full), distributed: ONE two-phase
     * scan yields the inclusive prefix sum AND the running position;
     * rolling_sum = prefix difference (exact decimal, an equi self-join
-    * on position − no global window, cost independent of n); min/max by
-    * the BLOCK DECOMPOSITION (van Herk/Gil–Werman — the
-    * [[graft.core.BalooRolling]] spelling): cut the positions into
-    * blocks of n, any trailing n-window spans ≤ 2 blocks, so the
-    * extremum is ext(current block's prefix-ext, previous block's
-    * suffix-ext from position i−n+1). Both scans are windows KEYED by
-    * block id; the cross-block half is one more equi join on the
-    * position — zero replication (round 6 donated each row n-fold
-    * through `explode(sequence)`). All joins are on the position —
-    * hash-partitionable at any scale.
+    * on position − n, no global window, cost independent of n);
+    * min/max by the BLOCK DECOMPOSITION over the position
+    * ([[graft.operators.Scan.blockExtremes]], the
+    * [[graft.core.BalooRolling]] spelling): two block-KEYED window scans
+    * and one more equi join on the position — zero replication (round 6
+    * donated each row n-fold through `explode(sequence)`). All joins are
+    * on the position — hash-partitionable at any scale.
     */
   def qRollingGlobal(s: SparkSession, dir: String): DataFrame = {
     val n = 7
     // every leg reads the SAME cached artifact — without the memo each
     // DataFrame reference would re-run the whole two-phase scan
     val base = prefixBase(s, dir)
-    val lagDonor = base.select((col("__rn") + n).as("__rn"),
-      col("__psum").as("__plag"))
-    val wPre = Window.partitionBy("__blk").orderBy("__rn")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wSuf = Window.partitionBy("__blk").orderBy(col("__rn").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val scanned = base
-      .withColumn("__blk", expr(s"(__rn - 1) DIV $n"))
-      .withColumn("__pmn", min("o_totalprice").over(wPre))
-      .withColumn("__pmx", max("o_totalprice").over(wPre))
-      .withColumn("__smn", min("o_totalprice").over(wSuf))
-      .withColumn("__smx", max("o_totalprice").over(wSuf))
-    // row at position j donates its previous-block suffix-ext to the
-    // row n−1 positions later (whose window starts at j)
-    val sufDonor = scanned.select((col("__rn") + (n - 1).toLong).as("__rn"),
-      col("__smn").as("__xmn"), col("__smx").as("__xmx"))
-    // p = n−1 ⇒ the window IS one whole block: prefix-ext alone
-    val blockEnd = expr(s"(__rn - 1) % $n") === (n - 1).toLong
-    scanned
-      .join(lagDonor, Seq("__rn"), "left")
-      .join(sufDonor, Seq("__rn"), "left")
+    val price = col("o_totalprice")
+    graft.operators.Scan
+      .blockExtremes(base, "__rn", 1, n, Seq((price, "min", "mn"), (price, "max", "mx")),
+        before = graft.operators.Scan.shiftJoin(_, base, "__rn", n,
+          col("__psum").as("__plag")))
       .select(
         col("o_orderkey"), col("o_totalprice"),
         when(col("__rn") >= n,
@@ -547,12 +526,8 @@ object PandasExt extends QueryModule {
         when(col("__rn") >= n,
           (col("__psum") - coalesce(col("__plag"), lit(0))).cast("double") / lit(n))
           .as("roll_mean"),
-        when(col("__rn") >= n,
-          when(blockEnd, col("__pmn")).otherwise(least(col("__pmn"), col("__xmn"))))
-          .as("roll_min"),
-        when(col("__rn") >= n,
-          when(blockEnd, col("__pmx")).otherwise(greatest(col("__pmx"), col("__xmx"))))
-          .as("roll_max"))
+        when(col("__rn") >= n, col("mn")).as("roll_min"),
+        when(col("__rn") >= n, col("mx")).as("roll_max"))
       .orderBy("o_orderkey")
   }
 
@@ -570,10 +545,8 @@ object PandasExt extends QueryModule {
   def qRollingStd(s: SparkSession, dir: String): DataFrame = {
     val n = 7
     val base = prefixBase(s, dir)
-    val lagDonor = base.select((col("__rn") + n).as("__rn"),
-      col("__psc").as("__clag"), col("__ps2").as("__s2lag"))
-    base
-      .join(lagDonor, Seq("__rn"), "left")
+    graft.operators.Scan
+      .shiftJoin(base, base, "__rn", n, col("__psc").as("__clag"), col("__ps2").as("__s2lag"))
       .withColumn("__s1", col("__psc") - coalesce(col("__clag"), lit(0L)))
       .withColumn("__s2", col("__ps2") - coalesce(col("__s2lag"), expr("CAST(0 AS DECIMAL(28,0))")))
       // the exact integer variance numerator n·Σy² − (Σy)² (cents²);

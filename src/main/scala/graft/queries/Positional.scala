@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * are defined as positions under an explicit total order — here
   * (l_orderkey, l_linenumber). head/tail compile to
   * TakeOrderedAndProject (no full sort materialized); slice/iloc use
-  * [[graft.operators.Ordinal]] (range-partitioned sort + zipWithIndex,
-  * no single-partition window — see its scaladoc for the 100 TB
+  * [[graft.operators.Ordinal]] (the running count of the range-layout
+  * scan, no single-partition window — see its scaladoc for the 100 TB
   * rationale).
   */
 object Positional extends QueryModule {

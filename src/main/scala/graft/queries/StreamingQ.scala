@@ -27,18 +27,13 @@ object StreamingQ extends QueryModule {
         StreamOps.tumblingCounts(Tables.eventsTs(st)))
       .orderBy("bucket", "event_type")
 
-  /** Streaming sliding 1h/30m windows ≡ [[Windows.qWindowSliding]]:
-    * watermarked two-grid window aggregate with the decimal-exact sum
-    * discipline.
+  /** Streaming sliding 1h/30m windows ≡ [[Windows.qWindowSliding]] —
+    * the [[StreamOps.slidingCounts]] operator verbatim (decimal-exact
+    * sums; watermark inert under the complete-mode drain).
     */
   def qStreamSliding(s: SparkSession, dir: String): DataFrame =
     StreamDrain.drained(s, dir, "stream_sliding", "events")(st =>
-        Tables.eventsTs(st)
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(28,4)")).cast("double").as("sum_value"))
-          .select(col("window.start").as("bucket"), col("n"), col("sum_value")))
+        StreamOps.slidingCounts(Tables.eventsTs(st)))
       .orderBy("bucket")
 
   /** Streaming exact-dedup ingest gate, driver-checked: streaming

@@ -37,39 +37,17 @@ object StreamOps {
       .select(col("window.start").as("bucket"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Sliding windows (1h every 30m) with watermark. */
+  /** Sliding windows (1h every 30m) with watermark — the streaming twin
+    * of `graft.queries.Windows.qWindowSliding`, with the same
+    * decimal-exact value sum as [[tumblingCounts]].
+    */
   def slidingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("bucket"), col("n"))
-
-  /** Streaming dedup — the streaming face of the dedup suite: drop
-    * events whose `keys` were already seen within the watermark horizon
-    * (state is pruned as the watermark advances, so memory is bounded by
-    * the horizon, not the stream).
-    */
-  def dedupWithinWatermark(events: DataFrame,
-      keys: Seq[String], watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Streaming ingest decontamination — the streaming face of the
-    * batch decontamination / incremental-dedup queries: drop arriving
-    * documents whose content fingerprint appears in a STATIC blocklist
-    * (eval-set fingerprints, or an existing corpus's exact-dup
-    * digests). Stream-static left-anti join: the static side joins
-    * (broadcast when small) against each micro-batch, with NO streaming
-    * state at all — memory is bounded by the blocklist, not the
-    * stream. The near-dup variant at scale swaps the fingerprint
-    * equi-key for the LSH band key against the standing band index,
-    * same join shape.
-    */
-  def decontaminate(docs: DataFrame, blocklist: DataFrame,
-      fpCol: String = "fp"): DataFrame =
-    docs.join(blocklist, Seq(fpCol), "left_anti")
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(28,4)")).cast("double").as("sum_value"))
+      .select(col("window.start").as("bucket"), col("n"), col("sum_value"))
 
   /** Per-document distinct shingle hashes as an IN-ROW array — the same
     * 3-word-shingle · 60-bit-md5 pipeline as the batch posting index

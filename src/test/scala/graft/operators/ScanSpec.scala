@@ -48,46 +48,6 @@ class ScanSpec extends SparkSpec {
     assert(out.map(_.getLong(2)).toSeq == Seq(10L, 30L, 60L))
   }
 
-  test("assertTotalOrder flag fails fast on tied keys, on every layout") {
-    val rows = Seq((1L, 1.0), (1L, 2.0), (2L, 4.0), (3L, 16.0))
-    spark.conf.set(Scan.AssertTotalOrderKey, "true")
-    try {
-      for (parts <- Seq(1, 2, 4)) {
-        val e = intercept[IllegalArgumentException](
-          Scan.runningAgg(rows.toDF("k", "v").repartition(parts),
-            Seq(col("k")), col("v"), "sum", "cs"))
-        assert(e.getMessage.contains("tie-break"), s"layout parts=$parts")
-      }
-      // a unique order passes the same gate
-      val ok = Scan.runningAgg(
-          Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v"),
-          Seq(col("k")), col("v"), "sum", "cs")
-        .orderBy("k").collect()
-      assert(ok.map(_.getDouble(2)).toSeq == Seq(1.0, 3.0))
-    } finally spark.conf.unset(Scan.AssertTotalOrderKey)
-  }
-
-  test("assertTotalOrder handles desc orders and a user column named count") {
-    spark.conf.set(Scan.AssertTotalOrderKey, "true")
-    try {
-      // a SortOrder column (col.desc) must be stripped to its key, not
-      // blow up groupBy with an AnalysisException
-      val desc = Scan.runningAgg(
-          Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v"),
-          Seq(col("k").desc), col("v"), "sum", "cs")
-        .orderBy(col("k").desc).collect()
-      assert(desc.map(_.getDouble(2)).toSeq == Seq(2.0, 3.0))
-      // a user column named "count" IN THE ORDER must not shadow the
-      // check's aggregate: these rows are tied on (k, count), and the
-      // old unaliased spelling resolved its own filter against the key
-      // column (all 1s) — silently passing a tied order
-      val trap = Seq((1L, 1L, 1.0), (1L, 1L, 2.0)).toDF("k", "count", "v")
-      val e = intercept[IllegalArgumentException](
-        Scan.runningAgg(trap, Seq(col("k"), col("count")), col("v"), "sum", "cs"))
-      assert(e.getMessage.contains("tie-break"))
-    } finally spark.conf.unset(Scan.AssertTotalOrderKey)
-  }
-
   test("duplicate order keys: every tie shares the deterministic prefix") {
     // ties in the order column: rows with equal k may permute within the
     // tie, but the scan result at the END of each tie group is fixed —
